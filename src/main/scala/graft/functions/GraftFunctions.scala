@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.DoubleType
@@ -11,8 +12,6 @@ import org.apache.spark.sql.types.DoubleType
   */
 object GraftFunctions {
 
-  /** Register custom functions in the session's FunctionRegistry so they
-    * are usable from both the Column API (`call_function`) and SQL text. */
   /** Builder shared with [[graft.plans.GraftExtensions]]: casts inputs so
     * SQL-text literals (parsed as DECIMAL) and integer columns work. */
   def ewmAvgBuilder(exprs: Seq[Expression]): EwmAvg =
@@ -39,23 +38,27 @@ object GraftFunctions {
   def textStatsBuilder(exprs: Seq[Expression]): TextStats =
     TextStats(exprs.head)
 
+  /** Every custom function as (SQL name, expression class, builder):
+    * the one list [[register]] and [[graft.plans.GraftExtensions]] wire. */
+  private[graft] val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("ewm_avg", classOf[EwmAvg], ewmAvgBuilder),
+    ("graft_dot", classOf[DotProduct], dotBuilder),
+    ("graft_intersect_count", classOf[IntersectCount], intersectCountBuilder),
+    ("graft_chunk_tokens", classOf[ChunkTokens], chunkTokensBuilder),
+    ("graft_double_raw_bits", classOf[DoubleRawBits], doubleRawBitsBuilder),
+    ("graft_lsh_buckets", classOf[LshBuckets], lshBucketsBuilder),
+    ("graft_hd_rotate", classOf[HadamardRotate], hdRotateBuilder),
+    ("graft_text_stats", classOf[TextStats], textStatsBuilder))
+
+  /** Register every function the session's registry lacks, for both
+    * the Column API (`call_function`) and SQL text — a session built
+    * with [[graft.plans.GraftExtensions]] already has them all. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ewm_avg", ewmAvgBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_intersect_count", intersectCountBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chunk_tokens", chunkTokensBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_double_raw_bits", doubleRawBitsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_buckets", lshBucketsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hd_rotate", hdRotateBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_text_stats", textStatsBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    all.foreach { case (name, _, build) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 
   /** Codegen'd dense dot product ([[DotProduct]]). */

@@ -1,6 +1,5 @@
 package graft.plans
 
-import graft.functions.EwmAvg
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -21,51 +20,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the same frame agg up to 15x — see DedupWindowExpressions)
     ext.injectOptimizerRule(_ => DedupWindowExpressions)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("ewm_avg"),
-      new ExpressionInfo(classOf[EwmAvg].getName, "ewm_avg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.ewmAvgBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.dotBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_intersect_count"),
-      new ExpressionInfo(classOf[graft.functions.IntersectCount].getName,
-        "graft_intersect_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.intersectCountBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_chunk_tokens"),
-      new ExpressionInfo(classOf[graft.functions.ChunkTokens].getName,
-        "graft_chunk_tokens"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.chunkTokensBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_double_raw_bits"),
-      new ExpressionInfo(classOf[graft.functions.DoubleRawBits].getName,
-        "graft_double_raw_bits"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.doubleRawBitsBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lsh_buckets"),
-      new ExpressionInfo(classOf[graft.functions.LshBuckets].getName,
-        "graft_lsh_buckets"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.lshBucketsBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hd_rotate"),
-      new ExpressionInfo(classOf[graft.functions.HadamardRotate].getName,
-        "graft_hd_rotate"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.hdRotateBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_text_stats"),
-      new ExpressionInfo(classOf[graft.functions.TextStats].getName,
-        "graft_text_stats"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.textStatsBuilder(exprs)))
+    graft.functions.GraftFunctions.all.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

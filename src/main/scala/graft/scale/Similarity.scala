@@ -92,15 +92,15 @@ object Similarity {
   private[graft] def ivfSchedule(n: Long): Int =
     (4 to 20).map(b => 1 << b).find(k => n <= 256L * k).getOrElse(1 << 20)
 
-  /** Corpus row count, memoized per data dir: every schedule
-    * derivation ([[ivfK]], the LSH bits, the append cut) needs n, and
-    * even over the cached [[corpus]] each `.count()` is a whole Spark
-    * job — one per query invocation added up across the ANN family.
-    * n is a property of the immutable test dir, so pay it once. */
+  /** Corpus row count, memoized per dir and [[StoredIndex.fingerprint]]:
+    * every schedule derivation ([[ivfK]], the LSH bits, the append cut)
+    * needs n, and each `.count()` is a whole Spark job, while a
+    * rewritten corpus must be recounted. */
   private val corpusCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
   private[scale] def corpusCount(spark: SparkSession, dir: String): Long =
-    corpusCountCache.computeIfAbsent(dir, d => corpus(spark, d).count())
+    corpusCountCache.computeIfAbsent((dir, StoredIndex.fingerprint(spark, dir)),
+      _ => corpus(spark, dir).count())
 
   /** Scheduled centroid count for the corpus under `dir` — derived
     * from the memoized [[corpusCount]] (the same read [[graft.scale
@@ -724,37 +724,23 @@ object Similarity {
     * `SparkEntry.benchImpls`), i.e. the steady-state query cost the
     * annIvf2Search scaladoc's production note promises. */
   def annIvf2Serve(spark: SparkSession, dir: String): DataFrame = {
-    ivf2ServeBuild(spark, dir)
+    ivf2Stored(spark, dir, rebuild = true)
     ivf2ServeRead(spark, dir)
   }
 
-  /** The routing-index build write: supers, groups, and the (vec_id,
-    * cid) assignment, then the completion marker. */
-  private def ivf2ServeBuild(spark: SparkSession, dir: String): Unit = {
-    val tmp = ivf2ServePath(dir)
-    ivf2ServeMarker(tmp).delete() // invalidate before touching any table
-    val idx = ivf2Index(spark, dir)
-    idx.supers.write.mode("overwrite").parquet(s"$tmp/supers")
-    idx.groups.write.mode("overwrite").parquet(s"$tmp/groups")
-    // r16: `d` rides along so the delete rows can STAGE from the
-    // stored table instead of recomputing the n×k1 assignment per row
-    // ([[ivf2DeleteStage]]); the serve readers' explicit (vec_id, cid)
-    // schemas column-prune it, so their scans read the same bytes
-    idx.assigned.select(col("vec_id"), col("cid"), col("d"))
-      .write.mode("overwrite").parquet(s"$tmp/assigned")
-    ivf2ServeMarker(tmp).createNewFile() // all three tables are down
-  }
+  /** The stored serve index's base dir: supers, groups and the (vec_id,
+    * cid, d) assignment, built once per corpus. `d` rides along so the
+    * delete rows stage from the stored table instead of recomputing the
+    * n×k1 assignment; the serve readers' (vec_id, cid) schema
+    * column-prunes it. */
+  private[scale] def ivf2Stored(spark: SparkSession, dir: String,
+      rebuild: Boolean = false): String =
+    StoredIndex.ensure(spark, dir, ivf2ServePath(dir), rebuild)(
+      StoredIndex.writeIvf2(ivf2ServePath(dir), ivf2Index(spark, dir), "vec_id", "cid", "d"))
 
-  /** The three routing tables read back from the stored index,
-    * building it first on a fresh JVM — shared by [[ivf2ServeRead]]
-    * and [[ivfSqServeRead]]. */
-  private def ivf2StoredIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val tmp = ivf2ServePath(dir)
-    if (!ivf2ServeMarker(tmp).exists()) ivf2ServeBuild(spark, dir)
-    (spark.read.schema("sid BIGINT, sv ARRAY<DOUBLE>").parquet(s"$tmp/supers"),
-      spark.read.schema("cid BIGINT, cv ARRAY<DOUBLE>, sid BIGINT").parquet(s"$tmp/groups"),
-      spark.read.schema("vec_id BIGINT, cid BIGINT").parquet(s"$tmp/assigned"))
-  }
+  /** The stored serve index's assignment table. */
+  private[scale] def ivf2Assigned(spark: SparkSession, dir: String): StoredIndex.Table =
+    StoredIndex.Table(s"${ivf2Stored(spark, dir)}/assigned", ivf2AssignSchema)
 
   /** TWO-LEVEL IVF, incremental ingest: the assignment table is
     * APPEND-ONLY, so adding a batch of vectors to a built index costs
@@ -786,15 +772,13 @@ object Similarity {
     val cut = lit(corpusCount(spark, dir) * 9L / 10L)
     val full = idx.assigned.select(col("vec_id"), col("cid"), col("d"))
     // r16: day-0 is BY DEFINITION a built index — stage its rows from
-    // the stored serve table (one markered build per session) instead
+    // the stored serve table (one markered build per corpus) instead
     // of re-routing 90% of the corpus per run. Bit-identical by this
     // row's own argument: each vector routes independently and the
     // batch excludes vec_id < k, so the full assignment's prefix IS
     // the day-0 assignment. The BATCH stays routed in-plan — the
     // incremental cost this row exists to measure.
-    val serve = ivf2ServePath(dir)
-    if (!ivf2ServeMarker(serve).exists()) ivf2ServeBuild(spark, dir)
-    spark.read.schema(ivf2AssignSchema).parquet(s"$serve/assigned")
+    ivf2Assigned(spark, dir).read(spark)
       .filter(col("vec_id") < cut)
       .write.mode("overwrite").parquet(tmp)        // day-0 build
     full.filter(col("vec_id") >= cut)
@@ -881,70 +865,28 @@ object Similarity {
   // ------------------------------------------------------------- rebuild
   /** Root dir of the GENERATIONED serve index [[annIvf2Rebuild]]
     * maintains: `$root/gen-<g>/{supers,groups,assigned}` per
-    * generation, each behind its own completion marker, with the live
-    * generation named by the `_GRAFT_CURRENT` pointer file. */
+    * generation, with the live one named by the
+    * [[StoredIndex.cutover]] pointer. */
   private[scale] def ivf2RebuildPath(dir: String): String =
     graft.util.Scratch.path("ivf2rebuild", dir)
 
-  private def ivf2GenPointer(root: String): java.io.File =
-    new java.io.File(s"$root/_GRAFT_CURRENT")
-
-  /** The live generation name, read from the pointer — None before the
-    * first cutover. */
-  private[scale] def ivf2CurrentGen(root: String): Option[String] = {
-    val p = ivf2GenPointer(root)
-    if (p.exists())
-      Some(new String(java.nio.file.Files.readAllBytes(p.toPath), "UTF-8").trim)
-    else None
-  }
-
   /** Build ONE generation aside: train the two-level index over the
-    * given corpus slice at ITS OWN schedule, land the three tables
-    * under `$root/$gen`, then the completion marker. Nothing here
-    * touches the live generation — readers keep serving it. */
+    * given corpus slice at ITS OWN schedule and land it under
+    * `$root/$gen`. Nothing here touches the live generation. */
   private[scale] def ivf2RebuildAside(spark: SparkSession, root: String,
-      gen: String, c: DataFrame, n: Long): Unit = {
-    val base = s"$root/$gen"
-    val marker = new java.io.File(s"$base/_GRAFT_INDEX_COMPLETE")
-    marker.delete()
-    val idx = ivf2IndexOver(c, n)
-    idx.supers.write.mode("overwrite").parquet(s"$base/supers")
-    idx.groups.write.mode("overwrite").parquet(s"$base/groups")
-    idx.assigned.select(col("vec_id"), col("cid"))
-      .write.mode("overwrite").parquet(s"$base/assigned")
-    marker.createNewFile()
-  }
-
-  /** The CUTOVER: flip the pointer to a completed generation with an
-    * atomic rename (tmp write + ATOMIC_MOVE), so a reader sees either
-    * the old pointer or the new — never a partial one. The old
-    * generation's tables stay on disk (in-flight readers finish
-    * against them; reclaim is a later sweep), which is the
-    * two-phase swap every online index rebuild runs. */
-  private[scale] def ivf2RebuildCutover(root: String, gen: String): Unit = {
-    require(new java.io.File(s"$root/$gen/_GRAFT_INDEX_COMPLETE").exists(),
-      s"cutover to incomplete generation $gen at $root")
-    val tmp = java.nio.file.Paths.get(s"$root/_GRAFT_CURRENT.tmp")
-    java.nio.file.Files.write(tmp, gen.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, ivf2GenPointer(root).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+      gen: String, c: DataFrame, n: Long): Unit =
+    StoredIndex.build(s"$root/$gen")(
+      StoredIndex.writeIvf2(s"$root/$gen", ivf2IndexOver(c, n), "vec_id", "cid"))
 
   /** Serve against whatever generation the pointer names — the read
     * path a deployment's query fleet runs while rebuilds happen
     * underneath it. */
   private[scale] def ivf2GenServeRead(spark: SparkSession, dir: String,
       root: String): DataFrame = {
-    val gen = ivf2CurrentGen(root).getOrElse(
+    val gen = StoredIndex.currentGen(root).getOrElse(
       sys.error(s"no live generation at $root"))
-    val base = s"$root/$gen"
-    require(new java.io.File(s"$base/_GRAFT_INDEX_COMPLETE").exists(),
-      s"live generation $gen incomplete at $root")
-    top3(ivf2Route(corpus(spark, dir),
-      spark.read.schema("sid BIGINT, sv ARRAY<DOUBLE>").parquet(s"$base/supers"),
-      spark.read.schema("cid BIGINT, cv ARRAY<DOUBLE>, sid BIGINT").parquet(s"$base/groups"),
-      spark.read.schema("vec_id BIGINT, cid BIGINT").parquet(s"$base/assigned")))
+    StoredIndex.requireComplete(s"$root/$gen", s"live generation $gen")
+    ivf2ServeFrom(spark, dir, s"$root/$gen")
   }
 
   /** INDEX REBUILD — the retrain-and-swap executor for the
@@ -969,226 +911,27 @@ object Similarity {
     val root = ivf2RebuildPath(dir)
     val c = corpus(spark, dir)
     val n = corpusCount(spark, dir)
-    if (ivf2CurrentGen(root).isEmpty) { // day-0: the soon-stale build
+    if (StoredIndex.currentGen(root).isEmpty) { // day-0: the soon-stale build
       ivf2RebuildAside(spark, root, "gen-0", c.filter(col("vec_id") < n / 10L), n / 10L)
-      ivf2RebuildCutover(root, "gen-0")
+      StoredIndex.cutover(root, "gen-0")
     }
     ivf2RebuildAside(spark, root, "gen-1", c, n) // retrain at grown n
-    ivf2RebuildCutover(root, "gen-1")            // atomic flip
+    StoredIndex.cutover(root, "gen-1")            // atomic flip
     ivf2GenServeRead(spark, dir, root)
   }
 
-  /** The staged table [[annIvf2Delete]] mutates: the full two-level
-    * assignment, RANGE-CLUSTERED on vec_id into a fixed 8 files. The
-    * clustering is the point — a delete predicate on the cluster key
-    * touches a contiguous file subset, which is what makes copy-on-
-    * write DELETE affordable at scale (an unclustered table makes
-    * every file dirty and COW degenerates to a full rewrite; the same
-    * reason Delta/Iceberg pair DELETE with Z-order/clustering). The
-    * fixture stages 8 files; a production table sizes file count from
-    * bytes like [[annIvf2Compact]] does. */
-  private[scale] def ivf2DeleteStage(spark: SparkSession, dir: String,
-      tag: String = "ivf2del"): String = {
-    val tmp = graft.util.Scratch.path(tag, dir)
-    // r16: stage FROM the stored serve index (built once per session
-    // behind its completion marker — the table a deployment's delete
-    // actually mutates) instead of recomputing the n×k1 assignment
-    // argmins per delete row. The stored rows ARE ivf2Index().assigned
-    // (parquet doubles round-trip exactly), so the staged bytes — and
-    // every downstream census/swap/read-back — are bit-identical; what
-    // changes is the stage job: a column-pruned read + range write in
-    // place of the routing computation each of the four delete rows
-    // was re-paying (ann_ivf2_assign still prices the computation
-    // itself as its own bench row).
-    val serve = ivf2ServePath(dir)
-    if (!ivf2ServeMarker(serve).exists()) ivf2ServeBuild(spark, dir)
-    spark.read.schema(ivf2AssignSchema).parquet(s"$serve/assigned")
-      .repartitionByRange(8, col("vec_id"))
-      .write.mode("overwrite").parquet(tmp)
-    tmp
-  }
-
-  /** The COW delete kernel, factored out so DeleteSpec can snapshot
-    * file state around it: (1) find the files containing doomed rows —
-    * `vec_id < cutoff` pushes to parquet row-group stats, so on the
-    * range-clustered layout CLEAN files are pruned at the IO level and
-    * the census reads almost nothing; (2) rewrite ONLY those files'
-    * surviving rows; (3) swap — add the rewritten parts, drop the
-    * dirty originals. The file-list collect is bounded by the table's
-    * FILE count (8 here; a manifest at scale), never its row count.
-    * Plain-parquet staging makes the swap filesystem ops where
-    * Delta/Iceberg commit a manifest atomically — the row-level work
-    * (decode + filter + re-encode, the term that matters at 100 TB) is
-    * identical and touches the dirty subset only.
-    *
-    * CRASH CONTRACT (the marker protocol the serve index already has):
-    * the swap is journaled through `_GRAFT_SWAP_PENDING` inside the
-    * table dir — [[ivf2DeletePrepare]] stages ALL surviving rows
-    * (closed by Spark's committer; the journal itself is hsync'd, the
-    * parts are not — so the contract is exact under process kills and
-    * journal-synced best-effort under power loss), then commits the
-    * journal with an atomic rename; only
-    * [[ivf2DeleteRecover]] mutates the table, strictly roll-forward
-    * from the journal, each filesystem op checked and idempotent. A
-    * kill anywhere leaves one of two readable states: marker absent →
-    * the table is byte-identical to pre-delete (staged files live
-    * OUTSIDE the dir and `_`-prefixed files are invisible to parquet
-    * reads); marker present → the next [[ivf2DeleteRecover]] (which
-    * [[ivf2DeleteApply]] runs first, and any reader of a COW-
-    * maintained table must run before reading) completes the identical
-    * swap. No state serves a partial table. */
-  private[scale] def ivf2DeleteApply(spark: SparkSession, src: String, cutoff: Long,
-      schema: String = ivf2AssignSchema): Unit =
-    cowDeleteApply(spark, src, schema, col("vec_id") < cutoff)
-
-  /** The kernel behind [[ivf2DeleteApply]] with the doomed-row set as
-    * an explicit predicate (must be row-group-stats-prunable on the
-    * cluster key for the census to stay file-pruned): the retention
-    * rows delete `vec_id < cutoff`; [[annIvfSqDelete]]'s targeted
-    * purge deletes a scattered modular set. */
-  private[scale] def cowDeleteApply(spark: SparkSession, src: String,
-      schema: String, doomed: Column): Unit =
-    cowDeleteApplyBy(spark, src, schema, _.filter(doomed), _.filter(!doomed))
-
-  /** KEYED variant of the COW kernel — the fold half of the
-    * merge-on-read delete ([[annIvfSqMorFold]]): the doomed set arrives
-    * as a fit-sized id table (the tombstone sidecar), not a predicate,
-    * so the census selects doomed rows by a BROADCAST semi-join and
-    * stages survivors by the matching anti-join; journal and swap are
-    * shared verbatim with the predicate path. A keyed census cannot be
-    * row-group-pruned (scattered ids touch every file — that is
-    * precisely why the MOR rows defer it to compaction time). */
-  private[scale] def cowDeleteApplyKeys(spark: SparkSession, src: String,
-      schema: String, keys: DataFrame): Unit =
-    cowDeleteApplyBy(spark, src, schema,
-      _.join(broadcast(keys), Seq("vec_id"), "left_semi"),
-      _.join(broadcast(keys), Seq("vec_id"), "left_anti"))
-
-  private def cowDeleteApplyBy(spark: SparkSession, src: String, schema: String,
-      doomedRows: DataFrame => DataFrame,
-      survivors: DataFrame => DataFrame): Unit = {
-    ivf2DeleteRecover(spark, src) // finish any interrupted prior swap
-    if (cowDeletePrepareBy(spark, src, schema, doomedRows, survivors))
-      ivf2DeleteRecover(spark, src)
-  }
-
-  /** The assignment-table schema the COW kernel defaults to; the
-    * quantized-corpus delete ([[annSq8Delete]]) passes [[sq8Schema]] —
-    * the kernel itself is schema-agnostic (census, stage, swap). */
+  /** The assignment-table schema (vec_id, cid, d). */
   private[scale] val ivf2AssignSchema = "vec_id BIGINT, cid BIGINT, d DOUBLE"
 
-  /** The stored int8-corpus schema ([[sq8ServeBuild]]'s qtable and the
-    * append/delete maintenance rows over it). */
+  /** The stored int8-corpus schema ([[sq8QTable]] as written). */
   private[scale] val sq8Schema = "vec_id BIGINT, q ARRAY<TINYINT>, qn DOUBLE"
-
-  /** Swap journal path — `_`-prefixed, so Spark/DuckDB parquet reads
-    * of the table dir never see it. Its EXISTENCE is the commit point:
-    * written only after every surviving row is durably staged. */
-  private[scale] def ivf2SwapMarker(src: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(src, "_GRAFT_SWAP_PENDING")
-
-  /** Phases 1+2 of the COW delete: census the dirty files, stage their
-    * surviving rows OUTSIDE the table dir, then COMMIT the swap intent
-    * — a tab-separated journal (`R staged dest` per part to adopt,
-    * `D path` per original to drop) written to a temp name and
-    * atomically renamed to [[ivf2SwapMarker]]. Returns false (no
-    * journal, table untouched) when nothing is dirty. Crash anywhere
-    * in here ⇒ marker absent ⇒ readers serve the pre-delete table and
-    * the orphan stage dir is exit-swept by [[graft.util.Scratch]]. */
-  private[scale] def ivf2DeletePrepare(spark: SparkSession, src: String, cutoff: Long,
-      schema: String = ivf2AssignSchema): Boolean =
-    cowDeletePrepare(spark, src, schema, col("vec_id") < cutoff)
-
-  private[scale] def cowDeletePrepare(spark: SparkSession, src: String,
-      schema: String, doomed: Column): Boolean =
-    cowDeletePrepareBy(spark, src, schema, _.filter(doomed), _.filter(!doomed))
-
-  private def cowDeletePrepareBy(spark: SparkSession, src: String, schema: String,
-      doomedRows: DataFrame => DataFrame,
-      survivors: DataFrame => DataFrame): Boolean = {
-    import org.apache.hadoop.fs.Path
-    // the file-path metadata column is attached at the scan, BEFORE the
-    // caller's doomed-row selection runs (a filter sees through the
-    // projection; the keyed variant's semi-join could not request
-    // _metadata on its own output)
-    val dirty = doomedRows(spark.read.schema(schema).parquet(src)
-        .withColumn("__graft_fp", col("_metadata.file_path")))
-      .select(col("__graft_fp")).distinct()
-      .collect().map(_.getString(0))
-    if (dirty.isEmpty) return false
-    val stage = graft.util.Scratch.register(s"$src.rewrite")
-    survivors(spark.read.schema(schema).parquet(dirty.toIndexedSeq: _*))
-      .write.mode("overwrite").parquet(stage)
-    val fs = new Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new Path(stage))
-      .filter(_.getPath.getName.startsWith("part-")).map(_.getPath)
-    val journal = parts.map(p => s"R\t$p\t${p.getName}") ++ dirty.map(d => s"D\t$d")
-    val tmpMarker = new Path(src, "_GRAFT_SWAP_PENDING.tmp")
-    val out = fs.create(tmpMarker, true)
-    out.write((journal.mkString("\n") + "\n").getBytes("UTF-8"))
-    // flush the journal to the device before the commit rename: without
-    // it the marker's EXISTENCE could survive a power loss while its
-    // CONTENT (or a staged part it references) sat in the page cache —
-    // and roll-forward would adopt a truncated file. hsync() syncs where
-    // the filesystem supports Syncable (HDFS, local RawLocalFileSystem)
-    // and degrades to a flush elsewhere. Durability scope: the journal
-    // is synced here; the staged parquet parts are closed by Spark
-    // committers without fsync, so the crash contract is exact for
-    // process kills and best-effort (journal-synced) for power loss —
-    // the same scope a plain-parquet lakehouse commit has without a
-    // WAL'd metastore.
-    out.hsync()
-    out.close()
-    require(fs.rename(tmpMarker, ivf2SwapMarker(src)),
-      s"COW swap: journal commit rename failed for $src")
-    true
-  }
-
-  /** Phase 3, strictly ROLL-FORWARD from the committed journal —
-    * adopt every staged part still at its staged path (renames are
-    * per-file atomic; one already adopted by an interrupted attempt no
-    * longer exists at the staged path and is skipped), then drop every
-    * dirty original still present, then clear the stage dir and the
-    * journal itself. Every filesystem op that should succeed is
-    * REQUIRED to (a false return — name collision, cross-FS rename,
-    * permission — raises instead of silently losing rows, the failure
-    * mode of the pre-r13 unchecked swap). Idempotent: re-running after
-    * a kill at ANY line completes the same swap; a no-marker call is a
-    * no-op. */
-  private[scale] def ivf2DeleteRecover(spark: SparkSession, src: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = ivf2SwapMarker(src)
-    if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val journal = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    journal.foreach(_.split('\t') match {
-      case Array("R", staged, destName) =>
-        val s = new Path(staged)
-        if (fs.exists(s))
-          require(fs.rename(s, new Path(src, destName)),
-            s"COW swap: adopt rename failed: $staged -> $src/$destName")
-      case _ => ()
-    })
-    journal.foreach(_.split('\t') match {
-      case Array("D", doomed) =>
-        val d = new Path(doomed)
-        if (fs.exists(d))
-          require(fs.delete(d, false), s"COW swap: drop failed: $doomed")
-      case _ => ()
-    })
-    val stage = new Path(s"$src.rewrite")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    require(fs.delete(marker, false), s"COW swap: journal clear failed for $src")
-  }
 
   /** COW DELETE from the stored assignment table — the index-lifecycle
     * operator FAISS calls `remove_ids` and a lakehouse calls `DELETE
     * WHERE`, completing the family (build → search → serve → append →
     * compact → staleness → DELETE): a retention purge drops the oldest
     * 5% of vectors (`vec_id < n/20`) from the range-clustered staged
-    * table via [[ivf2DeleteApply]]'s file-pruned copy-on-write, then
+    * table via [[StoredIndex.cowApply]]'s file-pruned copy-on-write, then
     * the read-back is oracle-checked against the full assignment SQL
     * filtered by the same predicate. Deletion applies to the
     * assignment TABLE only — the day-0 centroid/super sets are part of
@@ -1196,9 +939,10 @@ object Similarity {
     * stop appearing in results; the codebook is untouched until the
     * [[annIvf2Staleness]] census says rebuild). */
   def annIvf2Delete(spark: SparkSession, dir: String): DataFrame = {
-    val src = ivf2DeleteStage(spark, dir)
-    ivf2DeleteApply(spark, src, corpusCount(spark, dir) / 20L)
-    ivf2AssignmentView(spark, src)
+    val t = StoredIndex.stage(spark, ivf2Assigned(spark, dir), "ivf2del", dir)
+    StoredIndex.cowApply(spark, t,
+      StoredIndex.Doomed.where(col("vec_id") < corpusCount(spark, dir) / 20L))
+    ivf2AssignmentView(spark, t.path)
   }
 
   val annIvf2DeleteSql: String =
@@ -1208,26 +952,18 @@ object Similarity {
   /** Per-dir AND per-JVM (pid suffix): concurrent engine processes on
     * the same dir must not race each other's index rewrites — the same
     * scratch-collision class the k1 COW table hit (Sinks.k1CowPath).
-    * Digest-keyed and swept at JVM exit via [[graft.util.Scratch]];
-    * within a JVM the serve index is still written once and reused. */
+    * Digest-keyed and swept at JVM exit via [[graft.util.Scratch]]. */
   private[scale] def ivf2ServePath(dir: String): String =
     graft.util.Scratch.path("ivf2serve", dir)
 
-  /** Serve-index completion marker. Gating the read path on this file
-    * — written only AFTER all three tables land — rather than on bare
-    * directory existence means a JVM that crashed mid-build (or a
-    * stale pid-recycled dir) triggers a rebuild instead of silently
-    * serving a partial index. */
-  private def ivf2ServeMarker(tmp: String): java.io.File =
-    new java.io.File(s"$tmp/_GRAFT_INDEX_COMPLETE")
+  /** The read-only serve path: search against the stored index
+    * (building it first when it is missing or the corpus changed), so
+    * the measured warm call is always the stored-table search. */
+  private[graft] def ivf2ServeRead(spark: SparkSession, dir: String): DataFrame =
+    ivf2ServeFrom(spark, dir, ivf2Stored(spark, dir))
 
-  /** The read-only serve path: search against the materialized index.
-    * Bench's warmup runs the public entry (which writes the index)
-    * before any warm pass; on a fresh JVM where nothing has served
-    * `dir` yet, self-heal by building once — so the measured warm call
-    * is always the stored-table search. */
-  private[graft] def ivf2ServeRead(spark: SparkSession, dir: String): DataFrame = {
-    val (supers, groups, assigned) = ivf2StoredIndex(spark, dir)
+  private def ivf2ServeFrom(spark: SparkSession, dir: String, base: String): DataFrame = {
+    val (supers, groups, assigned) = StoredIndex.readIvf2(spark, base)
     top3(ivf2Route(corpus(spark, dir), supers, groups, assigned))
   }
 
@@ -1701,7 +1437,7 @@ object Similarity {
     val pqTop = adistTop(pqScored(spark, dir))
     val opqTop = adistTop(opqScored(spark, dir))
     // r16: the ivf2 and ivfsq rows route through the STORED index
-    // tables (one markered build per session — the frames the serve
+    // tables (one markered build per corpus — the frames the serve
     // rows already read) instead of re-running the n×k1 assignment
     // argmins TWICE inside this one query's plan. Recall is a property
     // of the index CONTENTS, which are identical bytes either way
@@ -1710,7 +1446,7 @@ object Similarity {
     // measures is unchanged. sq8/pq/opq stay self-contained: sq8 is
     // the inline half of the round-trip proof, and pq/opq have no
     // stored index to read.
-    val (s2, g2, a2) = ivf2StoredIndex(spark, dir)
+    val (s2, g2, a2) = StoredIndex.readIvf2(spark, ivf2Stored(spark, dir))
     recallOf(top10(ivf2Route(corpus(spark, dir), s2, g2, a2)), "ivf2")
       .union(recallOf(top10(lshMpCandidates(spark, dir)), "lsh_mp"))
       // r12: the SQ8 index joins the acceptance sheet — its stage-1
@@ -1723,11 +1459,11 @@ object Similarity {
       // the oracle, not just the spec)
       .union(recallOf(pqTop, "pq"))
       .union(recallOf(top10(
-        sq8ScoredOver(spark, dir, sq8StoredStage1(spark, dir))), "sq8_serve"))
+        sq8ScoredOver(spark, dir, sq8View(spark, sq8Stored(spark, dir)))), "sq8_serve"))
       // the composed production index: routing-bounded recall, scored
       // through the quantized list scan (stored frames — see above)
       .union(recallOf(top10(ivfSqScoredOver(spark, dir, s2, g2, a2,
-        sq8StoredStage1(spark, dir))), "ivfsq"))
+        sq8View(spark, sq8Stored(spark, dir)))), "ivfsq"))
       // r14: `opq` — PQ behind the fixed orthogonal rotation at the
       // SAME 8-byte code size; on this isotropic fixture the honest
       // measured delta vs `pq` is ≈ 0 (no energy imbalance to fix —
@@ -2615,61 +2351,39 @@ object Similarity {
     * stage 1 and touches the float table only for the ≤ 100 stage-2
     * winners plus the 10-row query set. */
   def annSq8Serve(spark: SparkSession, dir: String): DataFrame = {
-    sq8ServeBuild(spark, dir)
+    sq8Stored(spark, dir, rebuild = true)
     sq8ServeRead(spark, dir)
   }
 
-  /** The index-build write: quantize once, land `(vec_id, q TINYINT[],
-    * qn)`, then the completion marker. */
-  private def sq8ServeBuild(spark: SparkSession, dir: String): Unit = {
-    val tmp = sq8ServePath(dir)
-    sq8ServeMarker(tmp).delete() // invalidate before touching the table
-    sq8QTable(spark, dir).write.mode("overwrite").parquet(s"$tmp/qtable")
-    sq8ServeMarker(tmp).createNewFile()
-  }
-
   /** The storable quantized corpus `(vec_id, q TINYINT[64], qn)` — the
-    * frame every int8-table write lands ([[sq8ServeBuild]],
-    * [[annSq8Append]]'s day-0 build and batch, the delete fixture). */
+    * frame every int8-table write lands ([[sq8Stored]],
+    * [[annSq8Append]]'s day-0 build and batch). */
   private def sq8QTable(spark: SparkSession, dir: String): DataFrame =
     sq8Corpus(spark, dir)
       .select(col("vec_id"),
         transform(col("q"), _.cast("tinyint")).as("q"), col("qn"))
 
-  /** The stored quantized corpus as a stage-1 frame (TINYINT cast back
-    * to double — lossless), building the table first on a fresh JVM.
-    * Shared by [[sq8ServeRead]] and the `sq8_serve` row of
-    * [[annRecall2]]. */
-  private[scale] def sq8StoredStage1(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = sq8ServePath(dir)
-    if (!sq8ServeMarker(tmp).exists()) sq8ServeBuild(spark, dir)
-    sq8TableView(spark, s"$tmp/qtable")
+  /** The stored int8 table, quantized once per corpus. */
+  private[scale] def sq8Stored(spark: SparkSession, dir: String,
+      rebuild: Boolean = false): StoredIndex.Table = {
+    val base = StoredIndex.ensure(spark, dir, sq8ServePath(dir), rebuild)(
+      sq8QTable(spark, dir).write.mode("overwrite").parquet(s"${sq8ServePath(dir)}/qtable"))
+    StoredIndex.Table(s"$base/qtable", sq8Schema)
   }
 
   /** A stored int8 table read back as a stage-1 frame (TINYINT cast to
     * double — lossless). */
-  private def sq8TableView(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(sq8Schema).parquet(path)
-      .select(col("vec_id"), vecDouble(col("q")).as("q"), col("qn"))
+  private def sq8View(spark: SparkSession, t: StoredIndex.Table): DataFrame =
+    t.read(spark).select(col("vec_id"), vecDouble(col("q")).as("q"), col("qn"))
 
   /** Per-dir, per-JVM, exit-swept — same rationale as [[ivf2ServePath]]. */
   private[scale] def sq8ServePath(dir: String): String =
     graft.util.Scratch.path("sq8serve", dir)
 
-  /** Completion marker gating [[sq8ServeRead]] — written only AFTER
-    * the quantized table lands, so a crash mid-write triggers a
-    * rebuild instead of serving a partial table (the
-    * [[ivf2ServeMarker]] protocol). */
-  private def sq8ServeMarker(tmp: String): java.io.File =
-    new java.io.File(s"$tmp/_GRAFT_INDEX_COMPLETE")
-
   /** The read-only SQ8 serve path: stage 1 over the stored int8 table
-    * (cast back to double for the codegen'd dot — lossless, every cell
-    * an integer in [-127, 127]), stage 2 unchanged. Self-heals by
-    * building once on a fresh JVM, so the measured warm call is always
-    * the stored-table scan. */
+    * (building it first when missing or stale), stage 2 unchanged. */
   private[graft] def sq8ServeRead(spark: SparkSession, dir: String): DataFrame =
-    sq8Rescore(spark, dir, sq8ScoredOver(spark, dir, sq8StoredStage1(spark, dir)))
+    sq8Rescore(spark, dir, sq8ScoredOver(spark, dir, sq8View(spark, sq8Stored(spark, dir))))
 
   /** SQ8 incremental ingest — the CORPUS half of the FAISS `add()`
     * contract ([[annIvf2Append]] is the routing half; together the
@@ -2692,7 +2406,7 @@ object Similarity {
     * (SURVEY §2.5) that `ann_ivf2_append` already follows. */
   def annSq8Append(spark: SparkSession, dir: String): DataFrame =
     sq8Rescore(spark, dir, sq8ScoredOver(spark, dir,
-      sq8TableView(spark, sq8AppendWrite(spark, dir))))
+      sq8View(spark, StoredIndex.Table(sq8AppendWrite(spark, dir), sq8Schema))))
 
   /** Both phases of the append-table write; the spec drives the phases
     * separately to snapshot file state between them. */
@@ -2719,28 +2433,6 @@ object Similarity {
       .write.mode("append").parquet(tmp)
   }
 
-  /** The staged table [[annSq8Delete]] mutates: the int8 corpus
-    * RANGE-CLUSTERED on vec_id into a fixed 8 files — same rationale
-    * as [[ivf2DeleteStage]]: a delete predicate on the cluster key
-    * touches a contiguous file subset, so copy-on-write stays
-    * file-pruned instead of degenerating to a full rewrite. */
-  private[scale] def sq8DeleteStage(spark: SparkSession, dir: String,
-      tag: String = "sq8del"): String = {
-    val tmp = graft.util.Scratch.path(tag, dir)
-    // r16: stage FROM the stored int8 table (one markered build per
-    // session — the table a production delete mutates) instead of
-    // re-quantizing the float corpus per delete row; TINYINT/DOUBLE
-    // parquet round-trips are exact, so the staged bytes are identical
-    // (same rationale as [[ivf2DeleteStage]]; ann_sq8_search keeps
-    // pricing the inline quantization as a self-contained row).
-    val serve = sq8ServePath(dir)
-    if (!sq8ServeMarker(serve).exists()) sq8ServeBuild(spark, dir)
-    spark.read.schema(sq8Schema).parquet(s"$serve/qtable")
-      .repartitionByRange(8, col("vec_id"))
-      .write.mode("overwrite").parquet(tmp)
-    tmp
-  }
-
   /** COW DELETE from the stored int8 corpus — the delete half of the
     * corpus-maintenance contract ([[annSq8Append]] is the add half,
     * [[annIvf2Delete]] the routing-table half): FAISS `remove_ids` on
@@ -2751,17 +2443,17 @@ object Similarity {
     * the composed index — see the contract note on [[annIvfSqServe]])
     * would keep returning it. Same retention predicate and machinery
     * as the assignment delete: drop the oldest 5% (`vec_id < n/20`)
-    * from the range-clustered staged table via [[ivf2DeleteApply]]'s
-    * journaled file-pruned copy-on-write (schema-parameterized — the
-    * kernel is census/stage/swap and never interprets columns). The
-    * read-back projects the surviving quantized rows to scalars
-    * `(vec_id, qnorm, qsum)` — qn and the cell sum are integer-exact,
+    * from the range-clustered staged table via [[StoredIndex.cowApply]]'s
+    * journaled file-pruned copy-on-write. The read-back projects the
+    * surviving quantized rows to scalars `(vec_id, qnorm, qsum)` — qn
+    * and the cell sum are integer-exact,
     * so the DuckDB oracle recomputes them from the float table and
     * hash-matches bit-for-bit. */
   def annSq8Delete(spark: SparkSession, dir: String): DataFrame = {
-    val src = sq8DeleteStage(spark, dir)
-    ivf2DeleteApply(spark, src, corpusCount(spark, dir) / 20L, sq8Schema)
-    spark.read.schema(sq8Schema).parquet(src)
+    val t = StoredIndex.stage(spark, sq8Stored(spark, dir), "sq8del", dir)
+    StoredIndex.cowApply(spark, t,
+      StoredIndex.Doomed.where(col("vec_id") < corpusCount(spark, dir) / 20L))
+    t.read(spark)
       .select(col("vec_id"), round(col("qn"), 6).as("qnorm"),
         aggregate(vecDouble(col("q")), lit(0.0), _ + _).as("qsum"))
   }
@@ -2840,19 +2532,16 @@ object Similarity {
     // COW-rewrite INDEPENDENT scratch dirs with independent journals —
     // run them concurrently (guide §2.6) instead of idling the cluster
     // through each half's write/census/swap barriers in turn
+    val purge = StoredIndex.Doomed.where(ivfSqDoomed)
     val (asg, qt) = graft.util.Par.both(
-      { val a = ivf2DeleteStage(spark, dir, "ivfsqdelA")
-        cowDeleteApply(spark, a, ivf2AssignSchema, ivfSqDoomed); a },
-      { val q = sq8DeleteStage(spark, dir, "ivfsqdelQ")
-        cowDeleteApply(spark, q, sq8Schema, ivfSqDoomed); q })
+      { val a = StoredIndex.stage(spark, ivf2Assigned(spark, dir), "ivfsqdelA", dir)
+        StoredIndex.cowApply(spark, a, purge); a },
+      { val q = StoredIndex.stage(spark, sq8Stored(spark, dir), "ivfsqdelQ", dir)
+        StoredIndex.cowApply(spark, q, purge); q })
     // r16: the serve routes through the STORED supers/groups (already
     // built for the staging above) — the composed production shape —
     // instead of recomputing them from the corpus after the overlap
-    val (supers, groups, _) = ivf2StoredIndex(spark, dir)
-    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups,
-      spark.read.schema(ivf2AssignSchema).parquet(asg)
-        .select(col("vec_id"), col("cid")),
-      sq8TableView(spark, qt)))
+    StoredIndex.ivfSqServe(spark, dir, asg.read(spark), sq8View(spark, qt))
   }
 
   // the composed search oracle with the purged ids excluded from the
@@ -2881,28 +2570,10 @@ object Similarity {
     requireQueriesSurvive("ann_ivfsq_delete_mor")
     // the two staged halves are independent writes — overlap them (§2.6)
     val (asg, qt) = graft.util.Par.both(
-      ivf2DeleteStage(spark, dir, "ivfsqmorA"),
-      sq8DeleteStage(spark, dir, "ivfsqmorQ"))
-    val tomb = ivfSqMorTombstones(spark, dir, asg, "ivfsqmorT")
+      StoredIndex.stage(spark, ivf2Assigned(spark, dir), "ivfsqmorA", dir),
+      StoredIndex.stage(spark, sq8Stored(spark, dir), "ivfsqmorQ", dir))
+    val tomb = StoredIndex.tombstones(spark, asg, ivfSqDoomed, "ivfsqmorT", dir)
     ivfSqMorServeRead(spark, dir, asg, qt, tomb)
-  }
-
-  /** The MOR delete step: derive the purge-set id table from the
-    * predicate over ONE column of the assignment table (a production
-    * purge set arrives as ids; this is its fixture stand-in) and land
-    * it as the sidecar — a single tiny file, gated by the completion-
-    * marker protocol every other index table uses. The stored halves
-    * are not touched: this write IS the entire delete-time cost. */
-  private[scale] def ivfSqMorTombstones(spark: SparkSession, dir: String,
-      asg: String, tag: String): String = {
-    val tomb = graft.util.Scratch.path(tag, dir)
-    val marker = new java.io.File(s"$tomb/_GRAFT_INDEX_COMPLETE")
-    marker.delete()
-    spark.read.schema(ivf2AssignSchema).parquet(asg)
-      .filter(ivfSqDoomed).select(col("vec_id"))
-      .coalesce(1).write.mode("overwrite").parquet(tomb)
-    marker.createNewFile()
-    tomb
   }
 
   /** The merge-on-read serve: each stored half applies the tombstones
@@ -2911,23 +2582,16 @@ object Similarity {
     * though its bytes are still in both tables — the deletion-vector
     * contract. */
   private[scale] def ivfSqMorServeRead(spark: SparkSession, dir: String,
-      asg: String, qt: String, tomb: String): DataFrame = {
-    require(new java.io.File(s"$tomb/_GRAFT_INDEX_COMPLETE").exists(),
-      s"tombstone sidecar incomplete at $tomb")
-    val tombIds = spark.read.schema("vec_id BIGINT").parquet(tomb)
-    def live(df: DataFrame): DataFrame =
-      df.join(broadcast(tombIds), Seq("vec_id"), "left_anti")
-    val (supers, groups, _) = ivf2StoredIndex(spark, dir) // r16: stored routing
-    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups,
-      live(spark.read.schema(ivf2AssignSchema).parquet(asg))
-        .select(col("vec_id"), col("cid")),
-      live(sq8TableView(spark, qt))))
+      asg: StoredIndex.Table, qt: StoredIndex.Table, tomb: String): DataFrame = {
+    val tombIds = StoredIndex.tombstoneIds(spark, tomb)
+    StoredIndex.ivfSqServe(spark, dir, StoredIndex.live(asg.read(spark), tombIds),
+      StoredIndex.live(sq8View(spark, qt), tombIds))
   }
 
   /** The FOLD half of the merge-on-read delete — compaction applying
     * the accumulated tombstones to the data files (Delta/Iceberg's
     * OPTIMIZE folding deletion vectors): both stored halves run the
-    * KEYED COW kernel ([[cowDeleteApplyKeys]] — doomed rows selected by
+    * KEYED COW kernel ([[StoredIndex.Doomed.keys]] — doomed rows selected by
     * a broadcast semi-join against the sidecar, journal/swap machinery
     * shared with the eager row), the sidecar is cleared, and the
     * composed search then serves the folded tables with NO anti-join in
@@ -2941,19 +2605,15 @@ object Similarity {
     // staging, and later the two keyed folds, touch independent dirs
     // with independent journals — overlap each pair (§2.6)
     val (asg, qt) = graft.util.Par.both(
-      ivf2DeleteStage(spark, dir, "ivfsqfoldA"),
-      sq8DeleteStage(spark, dir, "ivfsqfoldQ"))
-    val tomb = ivfSqMorTombstones(spark, dir, asg, "ivfsqfoldT")
-    val keys = spark.read.schema("vec_id BIGINT").parquet(tomb)
+      StoredIndex.stage(spark, ivf2Assigned(spark, dir), "ivfsqfoldA", dir),
+      StoredIndex.stage(spark, sq8Stored(spark, dir), "ivfsqfoldQ", dir))
+    val tomb = StoredIndex.tombstones(spark, asg, ivfSqDoomed, "ivfsqfoldT", dir)
+    val keys = StoredIndex.Doomed.keys(StoredIndex.tombstoneIds(spark, tomb))
     graft.util.Par.both(
-      cowDeleteApplyKeys(spark, asg, ivf2AssignSchema, keys),
-      cowDeleteApplyKeys(spark, qt, sq8Schema, keys))
+      StoredIndex.cowApply(spark, asg, keys),
+      StoredIndex.cowApply(spark, qt, keys))
     graft.util.Scratch.cleanupPath(tomb) // tombstones folded in: sidecar retires
-    val (supers, groups, _) = ivf2StoredIndex(spark, dir) // r16: stored routing
-    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups,
-      spark.read.schema(ivf2AssignSchema).parquet(asg)
-        .select(col("vec_id"), col("cid")),
-      sq8TableView(spark, qt)))
+    StoredIndex.ivfSqServe(spark, dir, asg.read(spark), sq8View(spark, qt))
   }
 
   /** IVF-SQ8 — the composed index FAISS ships as `IVF<k>,SQ8`, and the
@@ -2992,8 +2652,7 @@ object Similarity {
   /** The quantized probed-list scan over EXPLICIT index frames — the
     * same kernel serves the self-contained query ([[ivfSqScored]]) and
     * the full production composition ([[ivfSqServeRead]]: routing
-    * tables from [[ivf2StoredIndex]], corpus from
-    * [[sq8StoredStage1]]). */
+    * tables from [[ivf2Stored]], corpus from [[sq8Stored]]). */
   private[scale] def ivfSqScoredOver(spark: SparkSession, dir: String,
       supers: DataFrame, groups: DataFrame, assigned: DataFrame,
       qcorpus: DataFrame): DataFrame = {
@@ -3037,18 +2696,16 @@ object Similarity {
     * [[annSq8Serve]] has no such join — its deletes MUST go through
     * [[annSq8Delete]]. */
   def annIvfSqServe(spark: SparkSession, dir: String): DataFrame = {
-    ivf2ServeBuild(spark, dir)
-    sq8ServeBuild(spark, dir)
+    ivf2Stored(spark, dir, rebuild = true)
+    sq8Stored(spark, dir, rebuild = true)
     ivfSqServeRead(spark, dir)
   }
 
-  /** The read-only composed serve path, self-healing both stored
-    * halves on a fresh JVM. */
-  private[graft] def ivfSqServeRead(spark: SparkSession, dir: String): DataFrame = {
-    val (supers, groups, assigned) = ivf2StoredIndex(spark, dir)
-    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups, assigned,
-      sq8StoredStage1(spark, dir)))
-  }
+  /** The read-only composed serve path, building either stored half
+    * when missing or stale. */
+  private[graft] def ivfSqServeRead(spark: SparkSession, dir: String): DataFrame =
+    StoredIndex.ivfSqServe(spark, dir, ivf2Assigned(spark, dir).read(spark),
+      sq8View(spark, sq8Stored(spark, dir)))
 
   /** The stored composed index re-laid for the STREAMING serve path
     * ([[graft.streaming.IndexNearDup]]): (routing, lists) where
@@ -3065,18 +2722,15 @@ object Similarity {
     * the stream-static equi-join on cid is the whole per-arrival
     * candidate fetch. */
   private[graft] def ivfSqStreamIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (supers, groups, assigned) = ivf2StoredIndex(spark, dir)
-    sq8StoredStage1(spark, dir) // ensure the int8 table is down
+    val (supers, groups, assigned) = StoredIndex.readIvf2(spark, ivf2Stored(spark, dir))
+    val qtable = sq8Stored(spark, dir)
     val tmp = graft.util.Scratch.path("ivfsqlists", dir)
-    val marker = new java.io.File(s"$tmp/_GRAFT_INDEX_COMPLETE")
-    if (!marker.exists()) {
-      spark.read.schema(sq8Schema).parquet(s"${sq8ServePath(dir)}/qtable")
+    StoredIndex.ensure(spark, dir, tmp)(
+      qtable.read(spark)
         .join(assigned, "vec_id")
         .groupBy(col("cid"))
         .agg(collect_list(struct(col("vec_id"), col("q"), col("qn"))).as("entries"))
-        .write.mode("overwrite").parquet(tmp)
-      marker.createNewFile()
-    }
+        .write.mode("overwrite").parquet(tmp))
     val routing = supers.agg(collect_list(struct(col("sid"), col("sv"))).as("supers"))
       .crossJoin(groups.agg(collect_list(struct(col("cid"), col("cv"), col("sid"))).as("groups")))
     val lists = spark.read.schema(

@@ -11,13 +11,19 @@ import org.apache.spark.sql.functions._
   * delete, no files touched). */
 class DeleteSpec extends SparkSpec {
 
+  private def staged(): StoredIndex.Table =
+    StoredIndex.stage(spark, Similarity.ivf2Assigned(spark, sfDir), "ivf2del", sfDir)
+  private def retention(cutoff: Long): StoredIndex.Doomed =
+    StoredIndex.Doomed.where(col("vec_id") < cutoff)
+
   private def snapshot(path: String): Map[String, (Long, Long)] =
     Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
       .map(f => f.getName -> (f.length(), f.lastModified())).toMap
 
   test("COW delete rewrites only dirty files; clean files are untouched; re-apply is a no-op") {
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val t = staged()
+    val src = t.path
     val n = Similarity.corpusCount(spark, sfDir)
     val cutoff = n / 20L
     assert(cutoff > 0, s"fixture must be big enough to delete something (n=$n)")
@@ -26,7 +32,7 @@ class DeleteSpec extends SparkSpec {
 
     val before = snapshot(src)
     assert(before.size == 8, s"range-clustered stage must be 8 files, got ${before.size}")
-    Similarity.ivf2DeleteApply(spark, src, cutoff)
+    StoredIndex.cowApply(spark, t, retention(cutoff))
     val after = snapshot(src)
 
     val untouched = before.keySet.intersect(after.keySet)
@@ -56,7 +62,7 @@ class DeleteSpec extends SparkSpec {
 
     // idempotence: nothing below the cutoff remains, so a second apply
     // must touch no files at all
-    Similarity.ivf2DeleteApply(spark, src, cutoff)
+    StoredIndex.cowApply(spark, t, retention(cutoff))
     assert(snapshot(src) == after, "re-applying the same delete must be a pure no-op")
 
     graft.util.Scratch.cleanupPath(src)
@@ -64,7 +70,8 @@ class DeleteSpec extends SparkSpec {
 
   test("crash windows: pre-commit kill serves the pre-delete table; post-commit kill rolls forward") {
     import org.apache.hadoop.fs.Path
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val t = staged()
+    val src = t.path
     val fs = new Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val n = Similarity.corpusCount(spark, sfDir)
     val cutoff = n / 20L
@@ -75,7 +82,7 @@ class DeleteSpec extends SparkSpec {
     val orphan = new java.io.File(src + ".rewrite")
     orphan.mkdirs()
     new java.io.FileWriter(new java.io.File(orphan, "part-orphan")) { write("x"); close() }
-    Similarity.ivf2DeleteRecover(spark, src)
+    StoredIndex.cowRecover(spark, src)
     assert(spark.read.parquet(src).count() == n,
       "no-marker state must serve the pre-delete table")
     assert(orphan.exists(), "recover without a marker must not touch the stage dir")
@@ -85,9 +92,9 @@ class DeleteSpec extends SparkSpec {
     // stages survivors + commits the journal; simulate an interrupted
     // recover by replaying its first op for ONE journal entry of each
     // kind, then killing — the re-run must complete the identical swap.
-    assert(Similarity.ivf2DeletePrepare(spark, src, cutoff),
+    assert(StoredIndex.cowPrepare(spark, t, retention(cutoff)),
       "fixture must have dirty files to stage")
-    val marker = Similarity.ivf2SwapMarker(src)
+    val marker = StoredIndex.swapMarker(src)
     assert(fs.exists(marker), "prepare must leave the committed journal")
     val journal = scala.io.Source.fromFile(
       new java.io.File(new java.net.URI(marker.toString).getPath)).getLines().toList
@@ -98,7 +105,7 @@ class DeleteSpec extends SparkSpec {
     assert(fs.rename(new Path(renames.head(1)), new Path(src, renames.head(2))))
     assert(fs.delete(new Path(drops.head(1)), false))
     // the "restart": roll forward from the journal
-    Similarity.ivf2DeleteRecover(spark, src)
+    StoredIndex.cowRecover(spark, src)
     assert(!fs.exists(marker), "recover must clear the journal")
     assert(!new java.io.File(src + ".rewrite").exists(), "recover must clear the stage dir")
     val got = spark.read.parquet(src)
@@ -106,7 +113,7 @@ class DeleteSpec extends SparkSpec {
     assert(got.agg(min(col("vec_id"))).head.getLong(0) == cutoff,
       "post-recovery table must be exactly the post-delete state")
     // and a recover with no marker stays a no-op
-    Similarity.ivf2DeleteRecover(spark, src)
+    StoredIndex.cowRecover(spark, src)
     assert(spark.read.parquet(src).count() == n - cutoff)
     graft.util.Scratch.cleanupPath(src)
   }
@@ -115,7 +122,7 @@ class DeleteSpec extends SparkSpec {
     // the IO-level pruning claim: on the range-clustered layout the
     // census read must reach the scan as a pushed filter (row-group
     // stats then skip clean files' groups entirely)
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val src = staged().path
     val plan = spark.read.schema("vec_id BIGINT, cid BIGINT, d DOUBLE").parquet(src)
       .filter(col("vec_id") < 25L)
       .select(col("_metadata.file_path")).distinct()

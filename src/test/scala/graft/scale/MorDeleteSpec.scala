@@ -20,16 +20,16 @@ class MorDeleteSpec extends SparkSpec {
       .map(f => f.getName -> (f.length(), f.lastModified())).toMap
 
   test("MOR delete rewrites ZERO data files: both censuses byte-identical, sidecar tiny") {
-    val asg = Similarity.ivf2DeleteStage(spark, sfDir, "morspecA")
-    val qt = Similarity.sq8DeleteStage(spark, sfDir, "morspecQ")
-    val (a0, q0) = (census(asg), census(qt))
+    val asg = StoredIndex.stage(spark, Similarity.ivf2Assigned(spark, sfDir), "morspecA", sfDir)
+    val qt = StoredIndex.stage(spark, Similarity.sq8Stored(spark, sfDir), "morspecQ", sfDir)
+    val (a0, q0) = (census(asg.path), census(qt.path))
     assert(a0.nonEmpty && q0.nonEmpty, "staging must land files")
-    val tomb = Similarity.ivfSqMorTombstones(spark, sfDir, asg, "morspecT")
+    val tomb = StoredIndex.tombstones(spark, asg, Similarity.ivfSqDoomed, "morspecT", sfDir)
     // the delete step is DONE here — name/length/mtime of every data
     // file in both halves must be untouched (the eager COW row
     // rewrites every file for this same scattered predicate)
-    assert(census(asg) == a0, "MOR delete must not touch assignment files")
-    assert(census(qt) == q0, "MOR delete must not touch int8 corpus files")
+    assert(census(asg.path) == a0, "MOR delete must not touch assignment files")
+    assert(census(qt.path) == q0, "MOR delete must not touch int8 corpus files")
     // and the sidecar is purge-set-sized, not table-sized
     val tombBytes = census(tomb).values.map(_._1).sum
     val tableBytes = (a0.values ++ q0.values).map(_._1).sum
@@ -53,22 +53,22 @@ class MorDeleteSpec extends SparkSpec {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(plan.contains("LeftAnti") && plan.contains("BroadcastHashJoin"),
       "tombstones must merge via broadcast anti-join:\n" + plan)
-    Seq(asg, qt, tomb).foreach(graft.util.Scratch.cleanupPath)
+    Seq(asg.path, qt.path, tomb).foreach(graft.util.Scratch.cleanupPath)
   }
 
   test("fold applies tombstones through the keyed COW kernel and retires the sidecar") {
-    val asg = Similarity.ivf2DeleteStage(spark, sfDir, "foldspecA")
-    val qt = Similarity.sq8DeleteStage(spark, sfDir, "foldspecQ")
-    val tomb = Similarity.ivfSqMorTombstones(spark, sfDir, asg, "foldspecT")
+    val asg = StoredIndex.stage(spark, Similarity.ivf2Assigned(spark, sfDir), "foldspecA", sfDir)
+    val qt = StoredIndex.stage(spark, Similarity.sq8Stored(spark, sfDir), "foldspecQ", sfDir)
+    val tomb = StoredIndex.tombstones(spark, asg, Similarity.ivfSqDoomed, "foldspecT", sfDir)
     val nDoomed = spark.read.schema("vec_id BIGINT").parquet(tomb).count()
     assert(nDoomed > 0, "the fixture purge set must be non-empty")
     val keys = spark.read.schema("vec_id BIGINT").parquet(tomb)
-    Similarity.cowDeleteApplyKeys(spark, asg, Similarity.ivf2AssignSchema, keys)
-    Similarity.cowDeleteApplyKeys(spark, qt, Similarity.sq8Schema, keys)
+    StoredIndex.cowApply(spark, asg, StoredIndex.Doomed.keys(keys))
+    StoredIndex.cowApply(spark, qt, StoredIndex.Doomed.keys(keys))
     graft.util.Scratch.cleanupPath(tomb)
     // physical: the doomed bytes are genuinely gone from both halves
-    val asgRows = spark.read.schema(Similarity.ivf2AssignSchema).parquet(asg)
-    val qtRows = spark.read.schema(Similarity.sq8Schema).parquet(qt)
+    val asgRows = asg.read(spark)
+    val qtRows = qt.read(spark)
     assert(asgRows.filter(col("vec_id") % 20 === 13).isEmpty,
       "no doomed assignment row may survive the fold")
     assert(qtRows.filter(col("vec_id") % 20 === 13).isEmpty,
@@ -83,10 +83,8 @@ class MorDeleteSpec extends SparkSpec {
       Similarity.ivfSqScoredOver(spark, sfDir,
         Similarity.ivf2Index(spark, sfDir).supers,
         Similarity.ivf2Index(spark, sfDir).groups,
-        spark.read.schema(Similarity.ivf2AssignSchema).parquet(asg)
-          .select(col("vec_id"), col("cid")),
-        spark.read.schema(Similarity.sq8Schema).parquet(qt)
-          .select(col("vec_id"), Similarity.vecDouble(col("q")).as("q"), col("qn"))))
+        asg.read(spark).select(col("vec_id"), col("cid")),
+        qt.read(spark).select(col("vec_id"), Similarity.vecDouble(col("q")).as("q"), col("qn"))))
     val plan = folded.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("LeftAnti"),
@@ -94,6 +92,6 @@ class MorDeleteSpec extends SparkSpec {
     val eager = Similarity.annIvfSqDelete(spark, sfDir)
     assert(folded.exceptAll(eager).isEmpty && eager.exceptAll(folded).isEmpty,
       "the folded serve must equal the eager COW delete, row for row")
-    Seq(asg, qt).foreach(graft.util.Scratch.cleanupPath)
+    Seq(asg.path, qt.path).foreach(graft.util.Scratch.cleanupPath)
   }
 }

@@ -153,16 +153,16 @@ class Sq8Spec extends SparkSpec {
   }
 
   test("corpus delete: a deleted vec_id's int8 row is gone and can never be served") {
-    val src = Similarity.sq8DeleteStage(spark, sfDir)
+    val src = StoredIndex.stage(spark, Similarity.sq8Stored(spark, sfDir), "sq8del", sfDir)
     val cutoff = Similarity.corpusCount(spark, sfDir) / 20L
-    Similarity.ivf2DeleteApply(spark, src, cutoff, Similarity.sq8Schema)
-    val survivors = spark.read.schema(Similarity.sq8Schema).parquet(src)
+    StoredIndex.cowApply(spark, src, StoredIndex.Doomed.where(col("vec_id") < cutoff))
+    val survivors = src.read(spark)
     assert(survivors.filter(col("vec_id") < cutoff).isEmpty,
       "no doomed int8 row may survive the COW swap")
     assert(survivors.filter(col("vec_id") >= cutoff).count() ==
       Similarity.corpusCount(spark, sfDir) - cutoff,
       "every surviving row must still be present")
-    graft.util.Scratch.cleanupPath(src)
+    graft.util.Scratch.cleanupPath(src.path)
   }
 
   test("tombstone-proof: an assignment-table delete alone already bars a vec_id from composed IVF-SQ8 output") {
@@ -171,12 +171,10 @@ class Sq8Spec extends SparkSpec {
     // enough to keep the deleted ids out of served results — the
     // contract annIvfSqServe's scaladoc pins for the window between the
     // routing delete landing and the corpus delete landing
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val src = StoredIndex.stage(spark, Similarity.ivf2Assigned(spark, sfDir), "ivf2del", sfDir)
     val cutoff = Similarity.corpusCount(spark, sfDir) / 20L
-    Similarity.ivf2DeleteApply(spark, src, cutoff)
-    val assigned = spark.read
-      .schema("vec_id BIGINT, cid BIGINT, d DOUBLE").parquet(src)
-      .select(col("vec_id"), col("cid"))
+    StoredIndex.cowApply(spark, src, StoredIndex.Doomed.where(col("vec_id") < cutoff))
+    val assigned = src.read(spark).select(col("vec_id"), col("cid"))
     val idx = Similarity.ivf2Index(spark, sfDir)
     val served = Similarity.sq8Rescore(spark, sfDir,
       Similarity.ivfSqScoredOver(spark, sfDir, idx.supers, idx.groups, assigned,
@@ -184,7 +182,7 @@ class Sq8Spec extends SparkSpec {
     assert(served.filter(col("neighbor_id") < cutoff).isEmpty,
       "a vec_id deleted from the assignment table must never be served")
     assert(served.count() > 0, "the post-delete index must still serve results")
-    graft.util.Scratch.cleanupPath(src)
+    graft.util.Scratch.cleanupPath(src.path)
   }
 
   test("serve plans touch the float table only in stage 2 (queries come from the stored qtable)") {
