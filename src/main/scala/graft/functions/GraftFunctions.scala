@@ -38,6 +38,15 @@ object GraftFunctions {
   def textStatsBuilder(exprs: Seq[Expression]): TextStats =
     TextStats(exprs.head)
 
+  def sq8Builder(exprs: Seq[Expression]): Sq8Quantize =
+    Sq8Quantize(exprs.head)
+
+  def ivfProbeBuilder(exprs: Seq[Expression]): IvfProbe =
+    IvfProbe(exprs.head, exprs(1), exprs(2))
+
+  def sq8BestBuilder(exprs: Seq[Expression]): Sq8Best =
+    Sq8Best(exprs.head, exprs(1), exprs(2), exprs.drop(3))
+
   /** Every custom function as (SQL name, expression class, builder):
     * the one list [[register]] and [[graft.plans.GraftExtensions]] wire. */
   private[graft] val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
@@ -48,7 +57,10 @@ object GraftFunctions {
     ("graft_double_raw_bits", classOf[DoubleRawBits], doubleRawBitsBuilder),
     ("graft_lsh_buckets", classOf[LshBuckets], lshBucketsBuilder),
     ("graft_hd_rotate", classOf[HadamardRotate], hdRotateBuilder),
-    ("graft_text_stats", classOf[TextStats], textStatsBuilder))
+    ("graft_text_stats", classOf[TextStats], textStatsBuilder),
+    ("graft_sq8", classOf[Sq8Quantize], sq8Builder),
+    ("graft_ivf_probe", classOf[IvfProbe], ivfProbeBuilder),
+    ("graft_sq8_best", classOf[Sq8Best], sq8BestBuilder))
 
   /** Register every function the session's registry lacks, for both
     * the Column API (`call_function`) and SQL text — a session built
@@ -84,6 +96,20 @@ object GraftFunctions {
     * bit-identical to the regexp_replace / split+HOF forms it replaces
     * (see the expression's scaladoc). */
   def textStats(c: Column): Column = call_function("graft_text_stats", c)
+
+  /** SQ8 codes of an array<double> vector as array<double> ([[Sq8Quantize]]):
+    * the one quantizer of the int8 corpus and the streamed arrivals. */
+  def sq8(v: Column): Column = call_function("graft_sq8", v)
+
+  /** The nprobe = 2 list ids of `v` through the two-level routing tables
+    * ([[IvfProbe]]), best first. */
+  def ivfProbe(v: Column, supers: Column, groups: Column): Column =
+    call_function("graft_ivf_probe", v, supers, groups)
+
+  /** struct(cos, vid): the best quantized-cosine entry of `lists` for the
+    * arrival (`aq`, `aqn`, `self`), self excluded ([[Sq8Best]]). */
+  def sq8Best(aq: Column, aqn: Column, self: Column, lists: Column*): Column =
+    call_function("graft_sq8_best", aq +: aqn +: self +: lists: _*)
 
   /** pandas `ewm(alpha=α, adjust=True).mean()` as a window aggregate. */
   def ewmAvg(c: Column, alpha: Double): Column =

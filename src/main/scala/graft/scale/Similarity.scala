@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over the embeddings table.
   *
@@ -125,10 +126,11 @@ object Similarity {
     * unrolled dot product. */
   private[scale] def corpus(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark) // graft_dot for every ANN query
-    Tables.embeddings(spark, dir)
+    val c = Tables.embeddings(spark, dir)
       .select(col("vec_id"), vecDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-      .cache()
+    // cached plans substitute at analysis, so a second cache() is a no-op
+    if (c.storageLevel == StorageLevel.NONE) c.cache() else c
   }
 
   // ---------------------------------------------------------------- brute force
@@ -2219,16 +2221,13 @@ object Similarity {
     * max would otherwise floor to -128 — outside both the documented
     * range and TINYINT-storable symmetry FAISS SQ8 keeps. maxabs=0
     * (the all-zero vector) quantizes to all-zero with qn 0; stage 1
-    * NULLIFs its cosine in both engines (see [[sq8ScoredOver]]). */
+    * NULLIFs its cosine in both engines (see [[sq8ScoredOver]]). The
+    * formula is one codegen'd expression ([[graft.functions
+    * .Sq8Quantize]]), shared with the streamed arrivals of
+    * [[graft.streaming.IndexNearDup]]. */
   private[scale] def sq8Corpus(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    c.withColumn("ma", array_max(transform(col("v"), x => abs(x))))
-      .withColumn("q", when(col("ma") > 0,
-          // Spark's floor returns BIGINT; cast back so the array stays
-          // ARRAY<DOUBLE> for graft_dot (values are exact small ints)
-          transform(col("v"), x => greatest(lit(-127.0),
-            least(lit(127.0), floor(x * lit(127.0) / col("ma")).cast("double")))))
-        .otherwise(transform(col("v"), _ => lit(0.0))))
+    c.withColumn("q", graft.functions.GraftFunctions.sq8(col("v")))
       .withColumn("qn", sqrt(dot(col("q"), col("q"))))
   }
 
@@ -2709,10 +2708,11 @@ object Similarity {
 
   /** The stored composed index re-laid for the STREAMING serve path
     * ([[graft.streaming.IndexNearDup]]): (routing, lists) where
-    * `routing` is a ONE-ROW frame packing the fit-sized routing tables
-    * (supers + groups as array<struct> columns — a stream-static cross
-    * join rides it along every arriving row so the per-row argmins run
-    * as map-side array folds, no streaming aggregation), and `lists`
+    * `routing` is a ONE-ROW local frame packing the fit-sized routing
+    * tables (supers + groups as array<struct> columns, collected here
+    * once — a stream-static cross join rides it along every arriving row
+    * so the per-row argmins run map-side, no streaming aggregation and
+    * no per-trigger re-aggregation of the stored tables), and `lists`
     * is the stored int8 corpus re-laid one-row-per-inverted-list
     * (cid, entries array<struct<vec_id, q TINYINT[], qn>>) — the
     * contiguous-list layout FAISS itself serves from, materialized
@@ -2731,8 +2731,11 @@ object Similarity {
         .groupBy(col("cid"))
         .agg(collect_list(struct(col("vec_id"), col("q"), col("qn"))).as("entries"))
         .write.mode("overwrite").parquet(tmp))
-    val routing = supers.agg(collect_list(struct(col("sid"), col("sv"))).as("supers"))
+    // collected once: a frame over the stored tables would re-run both
+    // aggregations (and their shuffles) on every trigger
+    val packed = supers.agg(collect_list(struct(col("sid"), col("sv"))).as("supers"))
       .crossJoin(groups.agg(collect_list(struct(col("cid"), col("cv"), col("sid"))).as("groups")))
+    val routing = spark.createDataFrame(java.util.Arrays.asList(packed.collect(): _*), packed.schema)
     val lists = spark.read.schema(
         "cid BIGINT, entries ARRAY<STRUCT<vec_id: BIGINT, q: ARRAY<TINYINT>, qn: DOUBLE>>")
       .parquet(tmp)

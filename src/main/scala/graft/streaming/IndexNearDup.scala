@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming near-duplicate check against the STORED vector index — the
@@ -17,40 +17,35 @@ import org.apache.spark.sql.functions._
   * The serve plan is STATELESS — no watermark, no streaming aggregation,
   * no state store — which is what lets it run at ingest rates:
   *
-  *  1. quantize the arriving vector map-side (the exact [[graft.scale
-  *     .Similarity]] SQ8 formula, clamp and all, so a streamed arrival
-  *     scores bit-identically to the batch index rows);
-  *  2. route it super→group with the ivf2 argmins, computed as array
-  *     folds over a ONE-ROW static frame carrying the fit-sized routing
-  *     tables (a stream-static cross join — the streaming equivalent of
-  *     the batch plan's query→super broadcast; a groupBy argmin would
-  *     need a watermarked streaming aggregation for no gain);
+  *  1. quantize the arriving vector map-side with the one SQ8 quantizer
+  *     the batch index uses ([[graft.functions.Sq8Quantize]]), so a
+  *     streamed arrival scores bit-identically to the batch index rows;
+  *  2. route it super→group with the ivf2 argmins in one codegen'd pass
+  *     ([[graft.functions.IvfProbe]]) over a ONE-ROW static frame that
+  *     carries the fit-sized routing tables. The frame is collected once
+  *     per [[nearDupStream]] call, so a trigger broadcasts it from local
+  *     rows instead of re-aggregating the stored tables (a stream-static
+  *     cross join — the streaming equivalent of the batch plan's
+  *     query→super broadcast; a groupBy argmin would need a watermarked
+  *     streaming aggregation for no gain);
   *  3. fetch the nprobe=2 probed lists by stream-static EQUI-join on
   *     cid against the stored index re-laid one-row-per-inverted-list
   *     ([[graft.scale.Similarity.ivfSqStreamIndex]] — the contiguous
   *     list layout FAISS serves from, each row O(list) ≈ 256 vectors);
   *  4. pick the best quantized cosine inside the ≤ 2 candidate arrays
-  *     with one more map-side fold, excluding the arrival itself.
+  *     with one more codegen'd pass ([[graft.functions.Sq8Best]]),
+  *     excluding the arrival itself.
   *
   * Per-arrival cost is exactly the index's serve promise — routing dots
   * + nprobe list scans — and per micro-batch the static list table scan
   * is shared across every arrival in the batch (the same amortization
   * the batch serve rows get across |queries|; SCALE.md's 1k-query
-  * receipt). At 100 TB the list table is the already-stored int8 corpus
-  * (4× smaller than the floats) and a deployment would bucket it by cid
-  * for IO pruning; nothing in the plan holds state, so parallelism is
-  * pure executor count.
+  * receipt). No step shuffles. At 100 TB the list table is the
+  * already-stored int8 corpus (4× smaller than the floats) and a
+  * deployment would bucket it by cid for IO pruning; nothing in the
+  * plan holds state, so parallelism is pure executor count.
   */
 object IndexNearDup {
-
-  private def vecDouble(c: Column): Column = transform(c, x => x.cast("double"))
-
-  /** Left-fold squared distance — same summation order (dim ascending,
-    * seeded 0.0) as the batch routing's unrolled 64-term sum, so the
-    * argmin picks identical lists. */
-  private def sqd(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (s, t) => s + t)
 
   /** The channel over explicit index frames (the spec drives this with
     * batch arrivals too — same function, streaming vs batch input, for
@@ -61,32 +56,18 @@ object IndexNearDup {
     * within the probed lists. */
   def nearDupAgainst(arrivals: DataFrame, routing: DataFrame,
       lists: DataFrame, tau: Double): DataFrame = {
-    val gdot = graft.functions.GraftFunctions.dot _
-    // (1) arrival-side SQ8 quantization — keep bit-identical to
-    // Similarity.sq8Corpus (clamp closes floor's 1-ulp hazard at the
-    // max-|x| dim; all-zero vector quantizes to all-zero, qn 0)
+    import graft.functions.GraftFunctions.{dot, ivfProbe, sq8, sq8Best}
+    // (1) arrival-side SQ8 quantization
     val quantized = arrivals
-      .withColumn("ma", array_max(transform(col("v"), x => abs(x))))
-      .withColumn("aq", when(col("ma") > 0,
-          transform(col("v"), x => greatest(lit(-127.0),
-            least(lit(127.0), floor(x * lit(127.0) / col("ma")).cast("double")))))
-        .otherwise(transform(col("v"), _ => lit(0.0))))
-      .withColumn("aqn", sqrt(gdot(col("aq"), col("aq"))))
-    // (2) two-level routing as array folds: best-2 supers by sqdist,
-    // then best-2 lists among the probed supers' groups — the same
-    // (dist, id) lexicographic tie-break as the batch ivf2Probes
+      .withColumn("aq", sq8(col("v")))
+      .withColumn("aqn", sqrt(dot(col("aq"), col("aq"))))
+    // (2) two-level routing: best-2 supers by sqdist, then best-2 lists
+    // among the probed supers' groups — the same (dist, id)
+    // lexicographic tie-break as the batch ivf2Probes
     val routed = quantized.crossJoin(routing)
-      .withColumn("sup2", slice(array_sort(transform(col("supers"), s =>
-        struct(sqd(col("v"), s.getField("sv")).as("d"),
-          s.getField("sid").as("sid")))), 1, 2))
-      .withColumn("cids", slice(array_sort(transform(
-        filter(col("groups"), g => exists(col("sup2"),
-          s => s.getField("sid") === g.getField("sid"))),
-        g => struct(sqd(col("v"), g.getField("cv")).as("d"),
-          g.getField("cid").as("cid")))), 1, 2))
+      .withColumn("cids", ivfProbe(col("v"), col("supers"), col("groups")))
       .select(col("vec_id"), col("ts"), col("aq"), col("aqn"),
-        get(col("cids"), lit(0)).getField("cid").as("cid1"),
-        get(col("cids"), lit(1)).getField("cid").as("cid2"))
+        get(col("cids"), lit(0)).as("cid1"), get(col("cids"), lit(1)).as("cid2"))
     // (3) candidate fetch: stream-static equi-joins on the probed cids
     // (left: a routed list can be empty-of-entries only in degenerate
     // fixtures, and cid2 is null when a tiny index has a single list)
@@ -95,25 +76,11 @@ object IndexNearDup {
         Seq("cid1"), "left")
       .join(lists.select(col("cid").as("cid2"), col("entries").as("e2")),
         Seq("cid2"), "left")
-      .withColumn("cands",
-        flatten(filter(array(col("e1"), col("e2")), a => a.isNotNull)))
-    // (4) best candidate: one fold, quantized cosine (integer dot —
-    // EXACT in float, no summation-order hazard), self excluded,
-    // (cosine desc, vec_id asc) tie-break like the batch stage-1 cut;
-    // a zero-norm candidate's cosine is NULL and never beats acc
-    val best = aggregate(col("cands"),
-      struct(lit(-2.0).as("cos"), lit(-1L).as("vid")),
-      (acc, e) => {
-        val cs = gdot(vecDouble(e.getField("q")), col("aq")) /
-          nullif(e.getField("qn") * col("aqn"), lit(0.0))
-        when(e.getField("vec_id") =!= col("vec_id") &&
-            (cs > acc.getField("cos") ||
-             (cs === acc.getField("cos") &&
-              e.getField("vec_id") < acc.getField("vid"))),
-          struct(cs.as("cos"), e.getField("vec_id").as("vid")))
-          .otherwise(acc)
-      })
-    cand.withColumn("best", best)
+    // (4) best candidate: quantized cosine (integer dot — EXACT in
+    // float, no summation-order hazard), self excluded, (cosine desc,
+    // vec_id asc) tie-break like the batch stage-1 cut; a zero-norm
+    // candidate's cosine is NULL and never wins
+    cand.withColumn("best", sq8Best(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")))
       .select(col("vec_id"), col("ts"),
         when(col("best").getField("cos") >= tau,
           col("best").getField("vid")).as("match_id"),

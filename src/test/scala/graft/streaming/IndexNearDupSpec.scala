@@ -2,15 +2,18 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.OutputMode
 
 /** The streamed near-dup-against-the-stored-index channel: batch
-  * equivalence against an INDEPENDENT mirror (joins + windows, where the
-  * channel runs array folds) across micro-batch boundaries, and the
-  * statelessness that is the channel's scale claim. */
+  * equivalence against an INDEPENDENT mirror (joins + windows on the
+  * higher-order-function arithmetic, where the channel runs codegen'd
+  * kernels) across micro-batch boundaries, the statelessness that is
+  * the channel's scale claim, and the per-trigger plan: kernels only,
+  * no shuffle. */
 class IndexNearDupSpec extends SparkSpec {
 
   private def ts(s: Long) = new java.sql.Timestamp(1700000000000L + s * 1000)
@@ -132,6 +135,42 @@ class IndexNearDupSpec extends SparkSpec {
       assert(q.lastProgress.stateOperators.isEmpty,
         "the serve plan must hold zero streaming state")
     } finally q.stop()
+  }
+
+  test("a micro-batch runs the codegen'd kernels, no HOF, and shuffles nothing") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val rows = arrivalRows()
+    val mem = MemoryStream[(Long, Seq[Double], java.sql.Timestamp)]
+    val q = IndexNearDup.nearDupStream(spark, sfDir,
+        mem.toDF().toDF("vec_id", "v", "ts"), tau)
+      .writeStream.format("memory").queryName("neardup_plan")
+      .outputMode(OutputMode.Append()).start()
+    val listener = new graft.ShuffleAudit.MetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (a, b) = rows.splitAt(rows.length / 2)
+      mem.addData(a: _*); q.processAllAvailable()
+      val (before, sb) = listener.quiesce()
+      mem.addData(b: _*); q.processAllAvailable()
+      val (after, sa) = listener.quiesce()
+      assert(sb && sa, "listener must settle around the micro-batch")
+      assert(after.jobs > before.jobs, "the micro-batch must have run jobs")
+      assert(after.shuffleWrite == before.shuffleWrite,
+        s"a micro-batch must shuffle nothing, wrote ${after.shuffleWrite - before.shuffleWrite} bytes")
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      // AQE runs streaming plans too: descend into its query stages
+      val exprs = new AdaptiveSparkPlanHelper {}.collect(plan) { case p => p.expressions }.flatten
+        .flatMap(_.collect { case e => e.getClass.getSimpleName })
+      val hofs = Set("ArraySort", "ArrayAggregate", "ArrayTransform", "ArrayFilter",
+        "ArrayExists", "ZipWith")
+      assert(exprs.filter(hofs).isEmpty, s"interpreted HOFs in the serve plan: ${exprs.filter(hofs)}")
+      Seq("Sq8Quantize", "IvfProbe", "Sq8Best").foreach(k =>
+        assert(exprs.contains(k), s"$k missing from the serve plan"))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      q.stop()
+    }
   }
 
   test("the same channel function over batch input gives the same rows") {
