@@ -1,4 +1,5 @@
 package graft
+import graft.util.Json
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query wall times at
@@ -43,32 +44,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = EngineConf.local(EngineConf.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_ONLY=headline restricts to the headline set (the sf1
-    // scale run, where the full registry would measure VM contention
-    // more than plans); any other value is a comma-separated explicit
-    // query list (the sf10 run benches only the scale-critical subset)
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val ordered = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some("headline") => all.filter(q => headline.contains(q._1))
-      case Some(list)       =>
-        val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        // a misspelled or stale name must fail HERE, loudly: silently
-        // filtering to fewer (or zero) queries would still overwrite
-        // BENCH_FULL.json with an empty/partial committed artifact
-        val unknown = names -- all.map(_._1).toSet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-        require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names nothing")
-        all.filter(q => names(q._1))
-      case None             => all
-    }
+    // SPARK_GRAFT_ONLY restricts the run (see SparkEntry.selected)
+    val ordered = SparkEntry.selected().toSeq.sortBy(_._1)
     // COLD pass: warms the session (codegen compiler, parquet footer
     // cache, JIT) and materializes every cache/memo a query registers.
     // Timed per-query so the cost the memos absorb stays attributable:
@@ -141,12 +120,12 @@ object Bench {
       case ((s, e), i) => (s"sweep${i + 1}", s, e)
     }).map { case (k, s, e) => s""""$k":[$s,$e]""" }.mkString("{", ",", "}")
     val fw = new java.io.PrintWriter("BENCH_FULL.json")
-    try fw.println(s"""{"metric":"total","value":${f(total)},"unit":"sec","warmup_sec":${f(warmupSec)},"n_queries":${results.size},"errors":$errs,"pass_ts_ms":$ts,"queries":${m(results)},"queries_cold":${m(cold)},"queries_warm_min":${m(warmMin)},"queries_warm_max":${m(warmMax)},"sf":"$sfDir"}""")
+    try fw.println(s"""{"metric":"total","value":${f(total)},"unit":"sec","warmup_sec":${f(warmupSec)},"n_queries":${results.size},"errors":$errs,"pass_ts_ms":$ts,"queries":${m(results)},"queries_cold":${m(cold)},"queries_warm_min":${m(warmMin)},"queries_warm_max":${m(warmMax)},"sf":${Json.str(sfDir)}}""")
     finally fw.close()
     val byName = results.toMap
     val qs = headline.flatMap(k => byName.get(k).map(v => "\"" + k + "\":" + f(v)))
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","warmup_sec":${f(warmupSec)},"n_queries":${results.size},"n_errors":${failed.size},"max_query":"${maxQ._1}","max_sec":${f(maxQ._2)},"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","warmup_sec":${f(warmupSec)},"n_queries":${results.size},"n_errors":${failed.size},"max_query":"${maxQ._1}","max_sec":${f(maxQ._2)},"queries":$qs,"sf":${Json.str(sfDir)}}"""
     spark.stop()
     // Printed AFTER spark.stop() so no executor/shutdown logging can
     // land on stdout behind it: the JSON is the process's last line.

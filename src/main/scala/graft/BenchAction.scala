@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
 
-/** The benchmark/materialization ACTION shared by [[Bench]], [[RunOne]],
-  * [[ShuffleAudit]] and [[MatCheck]]: forces EVERY output column of
+/** The benchmark/materialization ACTION shared by [[Bench]], [[Diag]]
+  * and [[MatCheck]]: forces EVERY output column of
   * every row.
   *
   * `count()` is NOT a benchmark action — Catalyst prunes all
@@ -43,10 +43,13 @@ object BenchAction {
       }
     }
 
+  /** The one-row (n, h) frame [[consume]] collects; `graft.Diag phases`
+    * reads its QueryExecution's phase timings. */
+  def action(df: DataFrame): DataFrame =
+    df.select(count(lit(1)).as("n"), sum(hash(canonical(df): _*).cast("long")).as("h"))
+
   def consume(df: DataFrame): (Long, Long) = {
-    val cols = canonical(df)
-    val row = df.select(count(lit(1)).as("n"),
-      sum(hash(cols: _*).cast("long")).as("h")).collect()(0)
+    val row = action(df).collect()(0)
     (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
   }
 }

@@ -1,10 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Session settings shared by every driver-contract main (r15
-  * optimization round) so Bench/Verify/MatCheck/RunOne/Plans all run
-  * the engine the same way the test harness does:
+/** The engine's one session shape. [[local]] builds it for every main
+  * (Bench, Verify, MatCheck, Plans, Diag, GenScale,
+  * scale.GenIvf2Fixture, streaming.StreamBench) and for the test suite
+  * (`SparkSpec.session`), so tests, benches, stream numbers and
+  * diagnostics all measure the same engine. A caller that needs an
+  * extra SQL conf sets it with `spark.conf.set` after the build
+  * (StreamBench's state-store provider). [[tune]] is the part that is
+  * independent of the master; the perfbench harness applies it to its
+  * own builder.
   *
+  * [[tune]] sets:
   *   - `spark.sql.extensions = graft.plans.GraftExtensions` — the
   *     documented production wiring for graft's Catalyst surface
   *     (custom functions, the as-of strategy, and the r15
@@ -33,4 +40,22 @@ object EngineConf {
       // on every warm run). Dropping the id makes generated source a
       // pure function of the subplan, so the cache can do its job.
       .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** `local[cpus]` with `partitions` shuffle partitions, UTC session
+    * time zone (the oracle SQL is written against naive UTC
+    * timestamps), no UI, and [[tune]]. */
+  def local(cpus: Int, partitions: Int): SparkSession =
+    tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", partitions.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+
+  /** One shuffle partition per core. */
+  def local(cpus: Int): SparkSession = local(cpus, cpus)
+
+  /** The `SPARK_GRAFT_CPUS` core count, or `default` when unset. */
+  def cpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Json
 import java.nio.file.{Files, Paths}
 
 /** Full-registry materialization gate: run EVERY [[SparkEntry.queries]]
@@ -21,27 +21,12 @@ object MatCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = if (args.length > 1) args(1) else "MATCHECK.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = EngineConf.local(EngineConf.cpus(16))
     spark.sparkContext.setLogLevel("ERROR")
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     var nErr = 0
-    // optional filter (same contract as ShuffleAudit): a targeted run
-    // whose rows are merged into a full artifact notes the merge there
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
+    // optional SPARK_GRAFT_ONLY filter (SparkEntry.selected): a targeted
+    // run whose rows are merged into a full artifact notes the merge there
+    val rows = SparkEntry.selected().toSeq.sortBy(_._1).map { case (name, fn) =>
       val cell = try {
         val (n, h) = BenchAction.consume(fn(spark, sfDir))
         s"""{"rows":$n,"checksum":$h}"""
@@ -49,11 +34,11 @@ object MatCheck {
         nErr += 1
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
         System.err.println(s"[matcheck] $name FAILED: $msg")
-        s"""{"err":${esc(msg)}}"""
+        s"""{"err":${Json.str(msg)}}"""
       }
-      s"${esc(name)}: $cell"
+      s"${Json.str(name)}: $cell"
     }
-    val json = s"""{"sf":${esc(sfDir)},"n":${rows.size},"n_err":$nErr,""" +
+    val json = s"""{"sf":${Json.str(sfDir)},"n":${rows.size},"n_err":$nErr,""" +
       s""""queries":${rows.mkString("{", ",", "}")}}"""
     Files.writeString(Paths.get(outPath), json)
     System.err.println(s"[matcheck] ${rows.size} queries, $nErr failed -> $outPath")

@@ -39,6 +39,30 @@ object SparkEntry {
       sources.Sinks.queries ++
       streaming.Subscriptions.queries ++
       analysis.Importance.queries
+  /** The registry entries a run is restricted to, in registry order.
+    * `only` is `SPARK_GRAFT_ONLY` (Verify and Diag pass their name
+    * argument): unset selects every query, `headline` the
+    * [[Bench.headline]] set (the sf1 scale run), anything else a
+    * comma-separated list of names (the sf10 run's scale-critical
+    * subset). A misspelled, stale or empty list fails HERE, loudly:
+    * silently running fewer (or zero) queries would still overwrite a
+    * committed artifact with an empty or partial one. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    only match {
+      case None => all
+      case Some(spec) =>
+        val names =
+          if (spec.trim == "headline") Bench.headline.toSet
+          else spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        require(names.nonEmpty, s"query list '$spec' names nothing")
+        val unknown = names -- all.keySet
+        require(unknown.isEmpty,
+          s"names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
+        all.filter(q => names(q._1))
+    }
+  }
   /** Build-plan overrides for the queries whose PUBLIC entry serves a
     * [[scale.DirMemo]]-memoized index (shared with other queries in
     * `queries`). A memo's plan after first touch is an ExistingRDD scan,

@@ -1,6 +1,7 @@
 package graft.analysis
 
 import graft.Tables
+import graft.util.CacheOnce._
 import graft.features.Indicators._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,7 +47,7 @@ object Importance {
       // cached: 7 narrow columns shared by all eight importance queries
       // (CacheManager matches the canonicalized plan across calls), so
       // the candle derivation + window pass runs once per session
-      .cache()
+      .cacheOnce()
   }
 
   /** Shared SQL mirror of [[featureFrame]]. */
@@ -388,7 +389,7 @@ object Importance {
         .select(col("id") +: plantedCoefs.map { case (n, _) => u(n).as(n) }: _*)
         .withColumn("target",
           plantedCoefs.map { case (n, c) => col(n) * lit(c) }.reduce(_ + _))
-        .cache()
+        .cacheOnce()
       f.count() // materialize eagerly so the first fit's timing is honest
       f
     }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.util.CacheOnce._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,7 +55,7 @@ object Pipeline {
       .withColumn("bb_lo", col("sma_20") - col("bb_std") * 2)
       // materialized once: the fit aggregate below is a second consumer —
       // without this the whole scan→agg→window prefix runs twice
-      .cache()
+      .cacheOnce()
     // stage 4 — normalization (A7 zscore, fit broadcast back)
     val fit = feat.agg(avg(col("close")).as("c_mean"), stddev(col("close")).as("c_std"))
     feat.crossJoin(broadcast(fit))

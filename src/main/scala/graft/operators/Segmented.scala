@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.util.CacheOnce._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -128,7 +129,7 @@ object Segmented {
       .withColumn("__den_local",
         (lit(1.0) - pow(lit(q), col("__i") + 1)) / lit(1.0 - q))
       .withColumn("__num_local", col("__mean_local") * col("__den_local"))
-      .cache()
+      .cacheOnce()
     val ends = base.groupBy(col("__seg"))
       .agg(count(lit(1)).as("len"),
         max_by(col("__num_local"), col("__i")).as("num_end"),

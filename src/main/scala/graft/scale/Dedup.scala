@@ -1,6 +1,7 @@
 package graft.scale
 
 import graft.Tables
+import graft.util.CacheOnce._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,7 +72,7 @@ object Dedup {
     * commute with per-doc shingling). */
   def shingleIndex(spark: SparkSession, dir: String): DataFrame =
     DirMemo.getOrCompute(spark, "shingles", dir)(
-      shingleRows(Tables.documents(spark, dir).select(col("doc_id"), col("text"))).cache())
+      shingleRows(Tables.documents(spark, dir).select(col("doc_id"), col("text"))).cacheOnce())
 
   // ---------------------------------------------------------------- exact
   /** Exact dedup by content hash: keep the lowest doc_id per hash group
@@ -123,7 +124,7 @@ object Dedup {
     val reps = Tables.documents(spark, dir)
       .groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
-    shingleRows(reps).cache()
+    shingleRows(reps).cacheOnce()
   }
 
   private def minhashSigArr(spark: SparkSession, dir: String): DataFrame = {
@@ -138,7 +139,7 @@ object Dedup {
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
         array((0 until 16).map(k => col(s"m$k")): _*).as("minhash"))
-      .cache()
+      .cacheOnce()
   }
 
   /** Query surface: signature serialized to one string (array cells
@@ -330,7 +331,7 @@ object Dedup {
     votes.groupBy(col("doc_id"))
       .agg(sum(when(col("vote") > 0,
         pow(lit(2.0), col("bit")).cast("long")).otherwise(0L)).as("simhash"))
-      .cache()
+      .cacheOnce()
   }
 
   val simhashCte: String =
@@ -404,7 +405,7 @@ object Dedup {
       .withColumn("n", size(col("ts")))
       .filter(col("n") > 0)
       .withColumn("lb", floor(log2(col("n"))))
-      .cache()
+      .cacheOnce()
     val side = d.withColumn("bkt", col("lb")).withColumn("home", lit(true))
       .unionByName(
         d.withColumn("bkt", col("lb") + 1).withColumn("home", lit(false)))
@@ -472,7 +473,7 @@ object Dedup {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), Similarity.vecDouble(col("embedding")).as("v"))
       .withColumn("nrm", Similarity.norm(col("v")))
-      .cache()
+      .cacheOnce()
 
   /** Embedding near-dup pairs, EXACT semantics: cosine ≥ 0.4 over all
     * pairs.
@@ -924,7 +925,7 @@ object Dedup {
         x => x("s")))
       .withColumn("arr", array_sort(transform(col("by_df"), x => x("s"))))
       .drop("by_df")
-      .cache()
+      .cacheOnce()
     val prefix = docs.select(col("doc_id").as("pa"), col("n").as("n_p"),
       explode(col("prefix")).as("s"))
     // docs is corpus-sized (one row per doc carrying the full sorted
@@ -1145,7 +1146,7 @@ object Dedup {
       .withColumn("nrm", Similarity.norm(col("v")))
     val assign = Similarity.annIvfAssign(spark, dir)
       .select(col("vec_id"), col("centroid_id"))
-    val av = assign.join(e, "vec_id").cache()
+    val av = assign.join(e, "vec_id").cacheOnce()
     val a = av.select(col("centroid_id"), col("vec_id").as("vec_a"),
       col("v").as("va"), col("nrm").as("na"))
     val b = av.select(col("centroid_id"), col("vec_id").as("vec_b"),

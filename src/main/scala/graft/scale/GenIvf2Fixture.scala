@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Writes the nested two-level-IVF parity fixture: n deterministic
@@ -20,12 +19,7 @@ object GenIvf2Fixture {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val n = if (args.length > 1) args(1).toLong else 5000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineConf.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     // distributed generation: spark.range scales to any n without the
     // driver materializing the corpus (same values as the previous

@@ -1,6 +1,7 @@
 package graft.scale
 
 import graft.Tables
+import graft.util.CacheOnce._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -219,7 +220,7 @@ object GraphOps {
     val parts = graphParts(edgeCount)
     val edges = pairs.select(col("a"), col("b"))
       .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-      .repartition(parts, col("b")).cache() // joined on b every round
+      .repartition(parts, col("b")).cacheOnce() // joined on b every round
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id")).coalesce(parts).localCheckpoint()
     var prevSum = Long.MinValue

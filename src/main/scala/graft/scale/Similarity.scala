@@ -1,10 +1,10 @@
 package graft.scale
 
 import graft.Tables
+import graft.util.CacheOnce._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over the embeddings table.
   *
@@ -126,11 +126,10 @@ object Similarity {
     * unrolled dot product. */
   private[scale] def corpus(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark) // graft_dot for every ANN query
-    val c = Tables.embeddings(spark, dir)
+    Tables.embeddings(spark, dir)
       .select(col("vec_id"), vecDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    // cached plans substitute at analysis, so a second cache() is a no-op
-    if (c.storageLevel == StorageLevel.NONE) c.cache() else c
+      .cacheOnce()
   }
 
   // ---------------------------------------------------------------- brute force
@@ -262,7 +261,7 @@ object Similarity {
     // the same scan)
     val c = corpus(spark, dir)
       .withColumn("bucket", lshBucket(col("v")))
-      .cache()
+      .cacheOnce()
     val q = c.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("bucket").as("qbucket"))
@@ -1928,7 +1927,7 @@ object Similarity {
         transform(col("closes"), x => (x - col("m")) / col("sd")).as("z"))
       // cached: read once as the query side (latest window) and once as
       // the corpus side — without this the candle+window chain runs twice
-      .cache()
+      .cacheOnce()
     val q = wins.filter(col("user_id") === 0)
       .orderBy(col("end_bucket").desc).limit(1)
       .select(col("z").as("qz"), col("end_bucket").as("q_end"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
@@ -69,7 +69,6 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATE", "2000").toInt
     val seconds = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECONDS", "8").toInt
     // knee sweep: re-run every channel at each rate in the list so the
@@ -108,13 +107,9 @@ object StreamBench {
         throw new IllegalArgumentException(
           s"SPARK_GRAFT_STATE_PROVIDER must be memory|rocksdb, got $other")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.metricsEnabled", "true")
-      .config("spark.sql.streaming.stateStore.providerClass", stateProvider)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineConf.local(graft.EngineConf.cpus(8))
+    spark.conf.set("spark.sql.streaming.metricsEnabled", "true")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", stateProvider)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

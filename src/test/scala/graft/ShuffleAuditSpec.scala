@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class ShuffleAuditSpec extends SparkSpec {
 
   test("delta brackets a shuffling query and settles to zero at rest") {
-    val listener = new ShuffleAudit.MetricsListener
+    val listener = new graft.obs.MetricsListener
     spark.sparkContext.addSparkListener(listener)
     try {
       val (before, sb) = listener.quiesce()
@@ -33,7 +33,7 @@ class ShuffleAuditSpec extends SparkSpec {
   }
 
   test("a scan-only count shuffles nothing beyond the partial-count rows") {
-    val listener = new ShuffleAudit.MetricsListener
+    val listener = new graft.obs.MetricsListener
     spark.sparkContext.addSparkListener(listener)
     try {
       val (before, _) = listener.quiesce()

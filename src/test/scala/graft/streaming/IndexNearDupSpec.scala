@@ -146,7 +146,7 @@ class IndexNearDupSpec extends SparkSpec {
         mem.toDF().toDF("vec_id", "v", "ts"), tau)
       .writeStream.format("memory").queryName("neardup_plan")
       .outputMode(OutputMode.Append()).start()
-    val listener = new graft.ShuffleAudit.MetricsListener
+    val listener = new graft.obs.MetricsListener
     spark.sparkContext.addSparkListener(listener)
     try {
       val (a, b) = rows.splitAt(rows.length / 2)
