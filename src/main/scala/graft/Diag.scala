@@ -81,10 +81,19 @@ object Diag {
   private def sec(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
 
   /** Cold run plus three warm runs per query, or (`explain`) the
-    * formatted physical plan of the warm variant. */
+    * formatted physical plan of each query under a `== <name> ==`
+    * header, followed by `== <name>/bench ==` for the rows with a
+    * [[SparkEntry.benchImpls]] variant. `scripts/plan_diff.py` diffs two
+    * such dumps. */
   def run(spark: SparkSession, sfDir: String, qs: Seq[(String, Query)],
       explain: Boolean): Unit =
-    if (explain) qs.foreach { case (name, fn) => warmImpl(name, fn)(spark, sfDir).explain("formatted") }
+    if (explain) qs.foreach { case (name, fn) =>
+      val variants = (name -> fn) +: SparkEntry.benchImpls.get(name).map(s"$name/bench" -> _).toSeq
+      variants.foreach { case (label, f) =>
+        println(s"== $label ==")
+        f(spark, sfDir).explain("formatted")
+      }
+    }
     else {
       coldPass(spark, sfDir, qs) { (name, wall, r) =>
         val (n, _) = r.toTry.get

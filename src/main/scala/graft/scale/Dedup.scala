@@ -712,14 +712,9 @@ object Dedup {
     * INDEX that multiple consumers read ([[Sampling.splitByCluster]],
     * [[dedupKeepBest]], the dedup keep-list) — the iterative loop runs
     * driver-side actions, so Spark's plan cache cannot deduplicate
-    * repeat calls by itself. [[invalidateClusters]] drops a dir's
-    * indexes when the data under it changes mid-session. */
+    * repeat calls by itself. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     DirMemo.getOrCompute(spark, "clusters", dir)(computeClusters(spark, dir))
-
-  /** Drop every memoized index for `dir` (all sessions) — call after
-    * rewriting the documents under it. */
-  def invalidateClusters(dir: String): Unit = DirMemo.invalidateDir(dir)
 
   private[graft] def computeClusters(spark: SparkSession, dir: String): DataFrame =
     // the shared min-label propagation loop (GraphOps.connectedComponents):

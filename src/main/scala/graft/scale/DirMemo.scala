@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ground truth): driver-side actions or cache() boundaries make
   * Spark's plan cache unable to deduplicate the repeat work by itself.
   *
-  * Entries are STRONG references, evicted only by [[invalidateDir]] (or
-  * [[clearAll]]). Round 4 held them as SoftReferences and heap pressure
+  * Entries are STRONG references, evicted only by [[invalidateDir]].
+  * Round 4 held them as SoftReferences and heap pressure
   * silently collected memoized frames mid-run: the localCheckpoint
   * blocks were GC-cleaned with the DataFrame and the index re-paid
   * non-deterministically, corrupting per-query bench attribution
@@ -57,15 +57,6 @@ private[graft] object DirMemo {
         e.getValue.computed.foreach(_.unpersist())
         it.remove()
       }
-    }
-  }
-
-  /** Drop everything — for tests that cycle many sessions in one JVM. */
-  def clearAll(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      it.next().getValue.computed.foreach(_.unpersist())
-      it.remove()
     }
   }
 }

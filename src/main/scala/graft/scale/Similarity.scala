@@ -132,38 +132,142 @@ object Similarity {
       .cacheOnce()
   }
 
-  // ---------------------------------------------------------------- brute force
-  /** Exact top-5 cosine neighbors for the first 10 vectors as queries. */
-  def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
-    val c = corpus(spark, dir)
-    val q = c.filter(col("vec_id") < 10)
+  // ------------------------------------------- scoring, top-k cuts, recall
+  /** The query set (query_id, qv, qn): the first `n` vectors of a
+    * (vec_id, v, nrm) corpus frame. */
+  private def queryVecs(c: DataFrame, n: Int = 10): DataFrame =
+    c.filter(col("vec_id") < n)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+
+  /** Exact cosine of a corpus row (v, nrm) against a query (qv, qn). */
+  private def cosine: Column = dot(col("v"), col("qv")) / (col("nrm") * col("qn"))
+
+  /** The exact brute-force pass: every corpus row scored against every
+    * other query, with `cosine` added. */
+  private def exactScored(c: DataFrame): DataFrame =
+    c.join(broadcast(queryVecs(c)), col("vec_id") =!= col("query_id"))
+      .withColumn("cosine", cosine)
+
+  /** The single-table LSH probe over a corpus frame carrying `bucket`:
+    * each query scores only the rows of its own bucket. */
+  private def lshScored(c: DataFrame): DataFrame = {
+    val q = c.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qn"), col("bucket").as("qbucket"))
+    c.join(broadcast(q),
+        col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
+      .withColumn("cosine", cosine)
   }
 
+  /** The per-query top-k cut of a scored (query_id, vec_id, …) frame:
+    * `row_number` over `order` with a vec_id tie-break, kept to ≤ k in
+    * column `rank`. Cosine cuts rank descending; the ADC cuts pass their
+    * ascending distance `col("adist")`. */
+  private def topK(scored: DataFrame, k: Int, order: Column = col("cosine").desc,
+      rank: String = "rank"): DataFrame =
+    scored.withColumn(rank, row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order, col("vec_id"))))
+      .filter(col(rank) <= k)
+
+  /** A top-k cut as result rows: (query_id, rank, neighbor_id, score
+    * rounded to 6 decimals). */
+  private def neighbors(cut: DataFrame, score: String = "cosine"): DataFrame =
+    cut.select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
+      round(col(score), 6).as(score))
+
+  /** The top-10 (query_id, vec_id) pairs: a recall sheet's retrieved
+    * or ground-truth set. */
+  private def top10(scored: DataFrame, order: Column = col("cosine").desc): DataFrame =
+    topK(scored, 10, order).select(col("query_id"), col("vec_id"))
+
+  /** One recall@10 row per query: how many of the retrieved top-10
+    * pairs (`approx`) are in the ground-truth top-10 (`truth`). */
+  private def recallOf(approx: DataFrame, truth: DataFrame, method: String): DataFrame =
+    approx.alias("a").join(truth.alias("b"),
+        col("a.query_id") === col("b.query_id") && col("a.vec_id") === col("b.vec_id"),
+        "left")
+      .groupBy(col("a.query_id").as("query_id"))
+      .agg(count(lit(1)).as("n_retrieved"), count(col("b.vec_id")).as("n_hits"))
+      .select(col("query_id"), lit(method).as("method"),
+        col("n_retrieved"), col("n_hits"),
+        round(col("n_hits").cast("double") / 10, 6).as("recall_at_10"))
+
+  // The same vocabulary on the oracle side: CTE fragments the DuckDB
+  // mirrors compose, each the SQL form of the engine helper it names.
+
+  /** CTE `name(vec_id, v, nrm)`: the embeddings as doubles with their L2
+    * norm — the mirror of [[corpus]]. */
+  private def normCte(name: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, embedding::DOUBLE[] AS v,
+       |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
+       |  FROM embeddings)""".stripMargin
+
+  /** CTE `name(query_id, vec_id, cosine)`: exact cosine of corpus alias
+    * `e` against query alias `q` over the `from` clause — the mirror of
+    * [[cosine]]. */
+  private def cosineCte(name: String, from: String, e: String = "e", q: String = "q"): String =
+    s"""$name AS (
+       |  SELECT $q.query_id, $e.vec_id,
+       |         list_sum(list_transform(list_zip($e.v, $q.qv), p -> p[1] * p[2])) / ($e.nrm * $q.qn) AS cosine
+       |  FROM $from)""".stripMargin
+
+  /** Final cut mirroring [[neighbors]] over [[topK]]: `src`'s
+    * (query_id, vec_id, cosine) rows ranked, the first `k` kept. */
+  private def neighborsSql(src: String, k: Int): String =
+    s"""ranked AS (
+       |  SELECT query_id, vec_id, cosine,
+       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
+       |  FROM $src)
+       |SELECT query_id, rank, vec_id AS neighbor_id, round(cosine, 6) + 0 AS cosine
+       |FROM ranked WHERE rank <= $k""".stripMargin
+
+  /** `ORDER BY` of a cosine cut and of an ADC cut (the eight partial
+    * distances summed in subspace order), for [[top10Cte]]. */
+  private val byCosineSql = " ORDER BY cosine DESC"
+  private val byAdistSql = "\n" + " " * 17 + "ORDER BY d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7"
+
+  /** CTE `name(query_id, vec_id)`: the top-10 pairs of `src` — the
+    * mirror of [[top10]]. */
+  private def top10Cte(name: String, src: String, order: String = byCosineSql): String =
+    s"""$name AS (
+       |  SELECT query_id, vec_id
+       |  FROM (SELECT query_id, vec_id,
+       |               row_number() OVER (PARTITION BY query_id$order, vec_id) AS rank
+       |        FROM $src)
+       |  WHERE rank <= 10)""".stripMargin
+
+  /** The recall sheet mirroring [[recallOf]]: CTE `rec` with one member
+    * per (method, retrieved CTE, truth CTE), then the recall@10 select.
+    * `notes` holds SQL comment lines set before a method's member. */
+  private def recallSql(rows: Seq[(String, String, String)],
+      notes: Map[String, String] = Map.empty): String = {
+    val members = rows.zipWithIndex.map { case ((method, approx, truth), i) =>
+      val counts =
+        if (i == 0) s"'$method' AS method, count(*) AS n_retrieved, count(b.vec_id) AS n_hits"
+        else s"'$method', count(*), count(b.vec_id)"
+      notes.get(method).fold("")(_ + "\n") +
+        s"  SELECT a.query_id, $counts\n" +
+        s"  FROM $approx a LEFT JOIN $truth b ON a.query_id = b.query_id AND a.vec_id = b.vec_id\n" +
+        "  GROUP BY a.query_id"
+    }
+    s"""rec AS (
+       |${members.mkString("\n  UNION ALL\n")})
+       |SELECT query_id, method, n_retrieved, n_hits,
+       |       round(CAST(n_hits AS DOUBLE) / 10, 6) + 0 AS recall_at_10
+       |FROM rec""".stripMargin
+  }
+
+  // ---------------------------------------------------------------- brute force
+  /** Exact top-5 cosine neighbors for the first 10 vectors as queries. */
+  def annBruteForce(spark: SparkSession, dir: String): DataFrame =
+    neighbors(topK(exactScored(corpus(spark, dir)), 5))
+
   val annBruteForceSql: String =
-    """WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
+    s"""WITH ${normCte("e")},
       |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM e WHERE vec_id < 10),
-      |scored AS (
-      |  SELECT q.query_id, e.vec_id,
-      |         list_sum(list_transform(list_zip(e.v, q.qv), p -> p[1] * p[2])) / (e.nrm * q.qn) AS cosine
-      |  FROM e, q WHERE e.vec_id <> q.query_id),
-      |ranked AS (
-      |  SELECT query_id, vec_id, cosine,
-      |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, rank, vec_id AS neighbor_id, round(cosine, 6) + 0 AS cosine
-      |FROM ranked WHERE rank <= 5""".stripMargin
+      |${cosineCte("scored", "e, q WHERE e.vec_id <> q.query_id")},
+      |${neighborsSql("scored", 5)}""".stripMargin
 
   /** [[annBruteForce]] re-expressed over the codegen'd
     * [[graft.functions.DotProduct]] Catalyst expression (`graft_dot`) —
@@ -171,22 +275,10 @@ object Similarity {
     * `doGenCode` loop replaces 64 unrolled multiply-adds per pair. The
     * point is the extension tier: where an unrolled form blows the
     * codegen budget (join conditions, wider vectors), the expression
-    * stays a single tree node and never falls back to interpretation. */
-  def annDotExpr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val c = corpus(spark, dir)
-    val q = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
-  }
+    * stays a single tree node and never falls back to interpretation.
+    * [[annBruteForce]] itself now scores through the same expression,
+    * so this row delegates to it; both stay registered. */
+  def annDotExpr(spark: SparkSession, dir: String): DataFrame = annBruteForce(spark, dir)
 
   // ---------------------------------------------------------------- LSH
   /** Sign-pattern bucket id over the 8 precomputed hyperplanes: unrolled
@@ -209,33 +301,55 @@ object Similarity {
       corpus(spark, dir).withColumn("bucket", lshBucket(col("v"))).localCheckpoint())
 
   private def bruteScored(spark: SparkSession, dir: String): DataFrame =
-    DirMemo.getOrCompute(spark, "ann_brute_scored", dir) {
-      val c = bucketedCorpus(spark, dir)
-      val q = c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (dot(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("cosine"))
-        .localCheckpoint()
-    }
+    DirMemo.getOrCompute(spark, "ann_brute_scored", dir)(
+      exactScored(bucketedCorpus(spark, dir))
+        .select(col("query_id"), col("vec_id"), col("cosine"))
+        .localCheckpoint())
 
   /** Corpus bucket assignment (one map pass — the index build). */
   def annLshBuckets(spark: SparkSession, dir: String): DataFrame =
     corpus(spark, dir)
       .select(col("vec_id"), lshBucket(col("v")).as("bucket"))
 
+  /** CTE `name(j, h)`: hyperplanes 0 … `last` of [[planes]], md5-derived
+    * exactly as the engine derives them. */
+  private def planesCte(name: String, last: String): String =
+    s"""$name AS (
+       |  SELECT j, list_transform(generate_series(0, 63),
+       |           d -> ('0x' || substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 8))::BIGINT
+       |                  / 2147483648.0 - 1.0) AS h
+       |  FROM unnest(generate_series(0, $last)) AS t(j))""".stripMargin
+
+  /** CTE `signs(vec_id, j, bit)`: each row of `src` against each of the
+    * 8 `planes` — the terms [[lshBucket]] sums. */
+  private def signsCte(src: String): String =
+    s"""signs AS (
+       |  SELECT $src.vec_id, p.j,
+       |         CASE WHEN list_sum(list_transform(list_zip($src.v, p.h), q -> q[1] * q[2])) >= 0
+       |              THEN CAST(pow(2.0, p.j) AS BIGINT) ELSE 0 END AS bit
+       |  FROM $src, planes p)""".stripMargin
+
+  /** The 8-plane bucket index chain: `e0` (norms), planes, sign bits,
+    * `b` (bucket ids), `e` (e0 with its bucket) and `q`, the query set
+    * with its bucket — shared by the LSH search, recall and NDCG
+    * oracles. */
+  private val lshChainCte: String =
+    s"""${normCte("e0")},
+       |${planesCte("planes", "7")},
+       |${signsCte("e0")},
+       |b AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS bucket FROM signs GROUP BY vec_id),
+       |e AS (SELECT e0.*, b.bucket FROM e0 JOIN b USING (vec_id)),
+       |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket AS qbucket
+       |      FROM e WHERE vec_id < 10)""".stripMargin
+
+  /** The mirror of [[lshScored]]: each query scores its own bucket. */
+  private def lshScoredCte(name: String): String =
+    cosineCte(name, "e JOIN q ON e.bucket = q.qbucket AND e.vec_id <> q.query_id")
+
   val annLshBucketsSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |planes AS (
-      |  SELECT j, list_transform(generate_series(0, 63),
-      |           d -> ('0x' || substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 8))::BIGINT
-      |                  / 2147483648.0 - 1.0) AS h
-      |  FROM unnest(generate_series(0, 7)) AS t(j)),
-      |signs AS (
-      |  SELECT e.vec_id, p.j,
-      |         CASE WHEN list_sum(list_transform(list_zip(e.v, p.h), q -> q[1] * q[2])) >= 0
-      |              THEN CAST(pow(2.0, p.j) AS BIGINT) ELSE 0 END AS bit
-      |  FROM e, planes p)
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |${planesCte("planes", "7")},
+      |${signsCte("e")}
       |SELECT vec_id, CAST(sum(bit) AS BIGINT) AS bucket
       |FROM signs GROUP BY vec_id""".stripMargin
 
@@ -262,49 +376,13 @@ object Similarity {
     val c = corpus(spark, dir)
       .withColumn("bucket", lshBucket(col("v")))
       .cacheOnce()
-    val q = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("bucket").as("qbucket"))
-    val scored = c.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    neighbors(topK(lshScored(c), 3))
   }
 
   val annLshSearchSql: String =
-    """WITH e0 AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
-      |planes AS (
-      |  SELECT j, list_transform(generate_series(0, 63),
-      |           d -> ('0x' || substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 8))::BIGINT
-      |                  / 2147483648.0 - 1.0) AS h
-      |  FROM unnest(generate_series(0, 7)) AS t(j)),
-      |signs AS (
-      |  SELECT e0.vec_id, p.j,
-      |         CASE WHEN list_sum(list_transform(list_zip(e0.v, p.h), q -> q[1] * q[2])) >= 0
-      |              THEN CAST(pow(2.0, p.j) AS BIGINT) ELSE 0 END AS bit
-      |  FROM e0, planes p),
-      |b AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS bucket FROM signs GROUP BY vec_id),
-      |e AS (SELECT e0.*, b.bucket FROM e0 JOIN b USING (vec_id)),
-      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket AS qbucket
-      |      FROM e WHERE vec_id < 10),
-      |scored AS (
-      |  SELECT q.query_id, e.vec_id,
-      |         list_sum(list_transform(list_zip(e.v, q.qv), p -> p[1] * p[2])) / (e.nrm * q.qn) AS cosine
-      |  FROM e JOIN q ON e.bucket = q.qbucket AND e.vec_id <> q.query_id),
-      |ranked AS (
-      |  SELECT query_id, vec_id, cosine,
-      |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, rank, vec_id AS neighbor_id, round(cosine, 6) + 0 AS cosine
-      |FROM ranked WHERE rank <= 3""".stripMargin
+    s"""WITH $lshChainCte,
+      |${lshScoredCte("scored")},
+      |${neighborsSql("scored", 3)}""".stripMargin
 
   // ------------------------------------------------------- multi-table LSH
   /** Bits per LSH table, schedule-derived: b = log₂([[ivfSchedule]](n)),
@@ -362,11 +440,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
-    val qv = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    pairs.join(c, "vec_id").join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        (dot(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("cosine"))
+    pairs.join(c, "vec_id").join(broadcast(queryVecs(c)), "query_id")
+      .select(col("query_id"), col("vec_id"), cosine.as("cosine"))
   }
 
   /** Multi-table multi-probe LSH search: top-3 over the unioned
@@ -377,26 +452,17 @@ object Similarity {
     * comes from table independence × probe width (measured in
     * [[annRecall2]] and the SCALE.md ANN table). */
   def annLshMpSearch(spark: SparkSession, dir: String): DataFrame =
-    lshMpCandidates(spark, dir)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    neighbors(topK(lshMpCandidates(spark, dir), 3))
 
   /** Oracle CTE fragment for the multi-table candidates — assumes a
     * preceding `e` CTE with (vec_id, v, nrm). Ends at `mscored`. */
   private[scale] val lshMpCandCte: String =
-    """bsched AS (
+    s"""bsched AS (
       |  SELECT coalesce(min(1::BIGINT << g.b), 1::BIGINT << 20) AS k,
       |         coalesce(min(g.b), 20) AS b
       |  FROM unnest(generate_series(4, 20)) AS g(b)
       |  WHERE (SELECT count(*) FROM embeddings) <= 256 * (1::BIGINT << g.b)),
-      |mplanes AS (
-      |  SELECT j, list_transform(generate_series(0, 63),
-      |           d -> ('0x' || substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 8))::BIGINT
-      |                  / 2147483648.0 - 1.0) AS h
-      |  FROM unnest(generate_series(0, 8 * (SELECT b FROM bsched) - 1)) AS t(j)),
+      |${planesCte("mplanes", "8 * (SELECT b FROM bsched) - 1")},
       |msigns AS (
       |  SELECT e.vec_id, p.j // (SELECT b FROM bsched) AS t,
       |         CASE WHEN list_sum(list_transform(list_zip(e.v, p.h), q -> q[1] * q[2])) >= 0
@@ -422,17 +488,9 @@ object Similarity {
       |       JOIN qm q ON q.query_id = p.query_id)""".stripMargin
 
   val annLshMpSearchSql: String =
-    s"""WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
+    s"""WITH ${normCte("e")},
       |$lshMpCandCte,
-      |ranked AS (
-      |  SELECT query_id, vec_id, cosine,
-      |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |  FROM mscored)
-      |SELECT query_id, rank, vec_id AS neighbor_id, round(cosine, 6) + 0 AS cosine
-      |FROM ranked WHERE rank <= 3""".stripMargin
+      |${neighborsSql("mscored", 3)}""".stripMargin
 
   // ---------------------------------------------------------------- IVF
   /** IVF coarse assignment (the second ANN index family — inverted file):
@@ -449,11 +507,6 @@ object Similarity {
     val c = corpus(spark, dir)
     val cents = c.filter(col("vec_id") < ivfK(spark, dir))
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val dist = (0 until 64)
-      .map { d =>
-        val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-        diff * diff
-      }.reduce(_ + _)
     // argmin as a HASH AGGREGATE, not a rank-1 window: min over the
     // packed (dist, cid) value ([[packArgmin]]) is exactly ORDER BY
     // dist, cid LIMIT 1 per vector, partial-aggregates map-side (k
@@ -462,7 +515,7 @@ object Similarity {
     // rides in the same aggregate: it always equals the packed
     // winner's dist (the pack orders by dist first).
     c.join(broadcast(cents), lit(true))
-      .select(col("vec_id"), col("cid"), dist.as("dist"))
+      .select(col("vec_id"), col("cid"), sqDist("v", "cv").as("dist"))
       .groupBy(col("vec_id"))
       .agg(min(packArgmin(col("dist"), col("cid"))).as("p"),
         min(col("dist")).as("d"))
@@ -598,9 +651,11 @@ object Similarity {
        |  FROM unnest(generate_series(4, 20)) AS g(b)
        |  WHERE (SELECT k FROM isched) <= 256 * (1::BIGINT << g.b))""".stripMargin
 
-  val annIvf2AssignSql: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |$ivf2SchedCte,
+  /** Oracle CTE fragment for the two-level build routing — assumes a
+    * preceding `e` CTE with (vec_id, v). Ends at `vroute` (vec_id, sid)
+    * with `croute` (cid, cv, sid) alongside. */
+  private[scale] val ivf2RouteCte: String =
+    s"""$ivf2SchedCte,
       |cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < (SELECT k FROM isched)),
       |sups AS (SELECT vec_id AS sid, v AS sv FROM e WHERE vec_id < (SELECT k1 FROM isched2)),
       |croute AS (
@@ -618,7 +673,11 @@ object Similarity {
       |             list_sum(list_transform(list_zip(e.v, s.sv),
       |                                     p -> (p[1] - p[2]) * (p[1] - p[2]))), s.sid) AS rk
       |    FROM e CROSS JOIN sups s)
-      |  WHERE rk = 1),
+      |  WHERE rk = 1)""".stripMargin
+
+  val annIvf2AssignSql: String =
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |$ivf2RouteCte,
       |dists AS (
       |  SELECT e.vec_id, c.cid,
       |         list_sum(list_transform(list_zip(e.v, c.cv),
@@ -657,7 +716,7 @@ object Similarity {
     * stored table, so steady-state query cost is routing (k1 + 2·k/k1
     * dots) plus the probed lists only — no per-query index rebuild. */
   def annIvf2Search(spark: SparkSession, dir: String): DataFrame =
-    top3(ivf2Candidates(spark, dir))
+    neighbors(topK(ivf2Candidates(spark, dir), 3))
 
   /** The scored (query_id, vec_id, cosine) candidate frame behind
     * [[annIvf2Search]] (top-3) and the `ivf2` row of [[annRecall2]]
@@ -680,8 +739,7 @@ object Similarity {
     c.join(assigned, "vec_id")
       .join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        (dot(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("cosine"))
+      .select(col("query_id"), col("vec_id"), cosine.as("cosine"))
   }
 
   /** The query→super→list routing alone: (query_id, qv, qn, cid), the
@@ -689,10 +747,8 @@ object Similarity {
     * scan ([[ivf2Route]]) and the quantized one ([[annIvfSqSearch]]). */
   private[scale] def ivf2Probes(c: DataFrame, supers: DataFrame,
       groups: DataFrame): DataFrame = {
-    val q = c.filter(col("vec_id") < annQueryCount)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     // query -> super routing: k1 dots per query, keep the 2 nearest
-    val qsup = q.join(broadcast(supers), lit(true))
+    val qsup = queryVecs(c, annQueryCount).join(broadcast(supers), lit(true))
       .select(col("query_id"), col("qv"), col("qn"), col("sid"),
         sqDist("qv", "sv").as("dist"))
       .withColumn("rk", row_number().over(
@@ -965,16 +1021,8 @@ object Similarity {
 
   private def ivf2ServeFrom(spark: SparkSession, dir: String, base: String): DataFrame = {
     val (supers, groups, assigned) = StoredIndex.readIvf2(spark, base)
-    top3(ivf2Route(corpus(spark, dir), supers, groups, assigned))
+    neighbors(topK(ivf2Route(corpus(spark, dir), supers, groups, assigned), 3))
   }
-
-  /** Shared top-3 cut over a scored (query_id, vec_id, cosine) frame. */
-  private def top3(scored: DataFrame): DataFrame =
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
 
   /** Oracle CTE fragment for the two-level ROUTING — assumes a
     * preceding `e` CTE with (vec_id, v, nrm). Ends at `probes`
@@ -982,25 +1030,7 @@ object Similarity {
     * [[ivf2CandCte]] adds the exact probed scan, [[annIvfSqSearchSql]]
     * the quantized one. */
   private[scale] val ivf2ProbeCte: String =
-    s"""$ivf2SchedCte,
-      |cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < (SELECT k FROM isched)),
-      |sups AS (SELECT vec_id AS sid, v AS sv FROM e WHERE vec_id < (SELECT k1 FROM isched2)),
-      |croute AS (
-      |  SELECT cid, cv, sid FROM (
-      |    SELECT c.cid, c.cv, s.sid,
-      |           row_number() OVER (PARTITION BY c.cid ORDER BY
-      |             list_sum(list_transform(list_zip(c.cv, s.sv),
-      |                                     p -> (p[1] - p[2]) * (p[1] - p[2]))), s.sid) AS rk
-      |    FROM cents c CROSS JOIN sups s)
-      |  WHERE rk = 1),
-      |vroute AS (
-      |  SELECT vec_id, sid FROM (
-      |    SELECT e.vec_id, s.sid,
-      |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |             list_sum(list_transform(list_zip(e.v, s.sv),
-      |                                     p -> (p[1] - p[2]) * (p[1] - p[2]))), s.sid) AS rk
-      |    FROM e CROSS JOIN sups s)
-      |  WHERE rk = 1),
+    s"""$ivf2RouteCte,
       |lists AS (
       |  SELECT vec_id, cid FROM (
       |    SELECT e.vec_id, c.cid,
@@ -1039,33 +1069,25 @@ object Similarity {
       |  WHERE e.vec_id <> p.query_id)""".stripMargin
 
   val annIvf2SearchSql: String =
-    s"""WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
+    s"""WITH ${normCte("e")},
       |$ivf2CandCte,
-      |ranked AS (
-      |  SELECT query_id, vec_id, cosine,
-      |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |  FROM cand)
-      |SELECT query_id, rank, vec_id AS neighbor_id, round(cosine, 6) + 0 AS cosine
-      |FROM ranked WHERE rank <= 3""".stripMargin
+      |${neighborsSql("cand", 3)}""".stripMargin
 
   /** IVF search: each query probes its nprobe=2 nearest centroid lists
     * and exact-searches only those — the candidate set shrinks ~8×
     * against 16 lists; recall < 1 when a true neighbor lives in an
     * unprobed list (the IVF trade). */
-  def annIvfSearch(spark: SparkSession, dir: String): DataFrame = {
-    val c = corpus(spark, dir)
+  def annIvfSearch(spark: SparkSession, dir: String): DataFrame =
+    neighbors(topK(ivfCandidates(spark, dir, corpus(spark, dir)), 3))
+
+  /** The scored nprobe = 2 candidates over a (vec_id, v, nrm) corpus
+    * frame, `cosine` added — behind [[annIvfSearch]] (top-3) and the
+    * `ivf` row of [[annRecall]] (top-10). */
+  private def ivfCandidates(spark: SparkSession, dir: String, c: DataFrame): DataFrame = {
     val cents = c.filter(col("vec_id") < ivfK(spark, dir))
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val dist = (0 until 64)
-      .map { d =>
-        val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-        diff * diff
-      }.reduce(_ + _)
     val assigned = c.join(broadcast(cents), lit(true))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid"), dist.as("dist"))
+      .select(col("vec_id"), col("v"), col("nrm"), col("cid"), sqDist("v", "cv").as("dist"))
     // hash-agg packed argmin (see annIvfAssign) for the corpus-wide
     // list assignment; the nprobe=2 probe set keeps the rank window —
     // it's 10 query rows, and top-k(>1) has no aggregate form
@@ -1083,29 +1105,23 @@ object Similarity {
     // broadcast hint; the equi-join on vec_id shuffles (or AQE
     // broadcasts the smaller side at runtime). probes is nprobe×queries
     // rows — genuinely tiny, hint it.
-    val cand = c.join(lists, "vec_id")
+    c.join(lists, "vec_id")
       .join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-    cand.withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+      .withColumn("cosine", cosine)
   }
 
-  val annIvfSearchSql: String =
-    s"""WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
-      |$ivfSchedCte,
-      |cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < (SELECT k FROM isched)),
+  /** The mirror of [[ivfCandidates]]' routing over a (vec_id, v, nrm)
+    * CTE `src`: centroid distances, `lists` (each vector's nearest
+    * centroid) and `probes` (each query's nprobe = 2 nearest). */
+  private def ivfProbeCte(src: String): String =
+    s"""$ivfSchedCte,
+      |cents AS (SELECT vec_id AS cid, v AS cv FROM $src WHERE vec_id < (SELECT k FROM isched)),
       |dists AS (
-      |  SELECT e.vec_id, e.v, e.nrm, c.cid,
-      |         list_sum(list_transform(list_zip(e.v, c.cv),
+      |  SELECT $src.vec_id, $src.v, $src.nrm, c.cid,
+      |         list_sum(list_transform(list_zip($src.v, c.cv),
       |                                 p -> (p[1] - p[2]) * (p[1] - p[2]))) AS dist
-      |  FROM e CROSS JOIN cents c),
+      |  FROM $src CROSS JOIN cents c),
       |lists AS (
       |  SELECT vec_id, cid
       |  FROM (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk
@@ -1115,19 +1131,18 @@ object Similarity {
       |  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cid
       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk
       |        FROM dists WHERE vec_id < 10)
-      |  WHERE rk <= 2),
+      |  WHERE rk <= 2)""".stripMargin
+
+  val annIvfSearchSql: String =
+    s"""WITH ${normCte("e")},
+      |${ivfProbeCte("e")},
       |cand AS (
       |  SELECT p.query_id, e.vec_id,
       |         list_sum(list_transform(list_zip(e.v, p.qv), q -> q[1] * q[2])) / (e.nrm * p.qn) AS cosine
       |  FROM e JOIN lists l ON e.vec_id = l.vec_id
       |         JOIN probes p ON l.cid = p.cid
       |  WHERE e.vec_id <> p.query_id),
-      |ranked AS (
-      |  SELECT query_id, vec_id, cosine,
-      |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |  FROM cand)
-      |SELECT query_id, rank, vec_id AS neighbor_id, round(cosine, 6) + 0 AS cosine
-      |FROM ranked WHERE rank <= 3""".stripMargin
+      |${neighborsSql("cand", 3)}""".stripMargin
 
   // ---------------------------------------------------------------- projection
   /** Random-projection dimensionality reduction (Johnson–Lindenstrauss):
@@ -1166,12 +1181,8 @@ object Similarity {
   }
 
   val embProjectSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |planes AS (
-      |  SELECT j, list_transform(generate_series(0, 63),
-      |           d -> ('0x' || substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 8))::BIGINT
-      |                  / 2147483648.0 - 1.0) AS h
-      |  FROM unnest(generate_series(0, 15)) AS t(j)),
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |${planesCte("planes", "15")},
       |proj AS (
       |  SELECT e.vec_id, p.j,
       |         list_sum(list_transform(list_zip(e.v, p.h), q -> q[1] * q[2])) AS s
@@ -1200,154 +1211,34 @@ object Similarity {
     * exists to surface: index parameters must track corpus shape, and
     * the recall probe is how a deployment notices. */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val k = 10
     // shared memoized indexes: the bucketed corpus and the brute-force
     // scored ground truth are read by this probe AND [[rankNdcg]] —
     // the brute pass was this query's dominant warm cost
     val c = bucketedCorpus(spark, dir)
-    val q = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("bucket").as("qbucket"))
-    val cos = dot(col("v"), col("qv")) / (col("nrm") * col("qn"))
-    def rank(scored: DataFrame): DataFrame =
-      scored.withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-        .filter(col("rank") <= k).select(col("query_id"), col("vec_id"))
-    val brute = rank(bruteScored(spark, dir))
-    val lsh = rank(c.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cos))
-    // IVF candidates exactly as in [[annIvfSearch]] (nprobe = 2;
-    // centroid count from the shared corpus-size schedule)
-    val cents = c.filter(col("vec_id") < ivfK(spark, dir))
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val dist = (0 until 64).map { d =>
-      val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-      diff * diff
-    }.reduce(_ + _)
-    val assigned = c.join(broadcast(cents), lit(true))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid"), dist.as("dist"))
-    val lists = assigned
-      .groupBy(col("vec_id"))
-      .agg(min(packArgmin(col("dist"), col("cid"))).as("p"))
-      .select(col("vec_id"), packedId(col("p")).as("cid"))
-    val probes = assigned.filter(col("vec_id") < 10)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cid"))))
-      .filter(col("rk") <= 2)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cid"))
-    // lists is corpus-sized — no broadcast hint (see annIvfSearch)
-    val ivf = rank(c.join(lists, "vec_id")
-      .join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cos))
-    def recallOf(approx: DataFrame, method: String): DataFrame =
-      approx.alias("a").join(brute.alias("b"),
-          col("a.query_id") === col("b.query_id") && col("a.vec_id") === col("b.vec_id"),
-          "left")
-        .groupBy(col("a.query_id").as("query_id"))
-        .agg(count(lit(1)).as("n_retrieved"), count(col("b.vec_id")).as("n_hits"))
-        .select(col("query_id"), lit(method).as("method"),
-          col("n_retrieved"), col("n_hits"),
-          round(col("n_hits").cast("double") / k, 6).as("recall_at_10"))
-    // PQ: top-10 of the whole corpus by asymmetric distance — measures
-    // pure quantization error (no candidate restriction to confound it)
-    val scents = pqPieces(c.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("v")), "v")
-      .select(col("cid"), col("s"), col("sub").as("csub"))
-    val codeRows = pqPieces(c.select(col("vec_id"), col("v")), "v")
-      .select(col("vec_id"), col("s"), col("sub"))
-      .join(broadcast(scents), Seq("s"))
-      .select(col("vec_id"), col("s"), col("cid"), pqSubDist.as("d"))
-      .groupBy(col("vec_id"), col("s"))
-      .agg(min(packArgmin(col("d"), col("cid"))).as("m"))
-      .select(col("vec_id"), col("s"), packedId(col("m")).as("cid"))
-    val qds = pqPieces(c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v")), "v")
-      .select(col("query_id"), col("s"), col("sub"))
-      .join(broadcast(scents), Seq("s"))
-      .select(col("query_id"), col("s"), col("cid"), pqSubDist.as("d"))
-    val parts = (0 until 8).map(s => sum(when(col("s") === s, col("d"))).as(s"d$s"))
-    val pq = codeRows.join(broadcast(qds), Seq("s", "cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(parts.head, parts.tail: _*)
-      .withColumn("adist", (0 until 8).map(s => col(s"d$s")).reduce(_ + _))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))))
-      .filter(col("rank") <= k).select(col("query_id"), col("vec_id"))
-    recallOf(lsh, "lsh").union(recallOf(ivf, "ivf")).union(recallOf(pq, "pq"))
+    val brute = top10(bruteScored(spark, dir))
+    recallOf(top10(lshScored(c)), brute, "lsh")
+      // IVF candidates exactly as in [[annIvfSearch]] (nprobe = 2;
+      // centroid count from the shared corpus-size schedule)
+      .union(recallOf(top10(ivfCandidates(spark, dir, c)), brute, "ivf"))
+      // PQ: top-10 of the whole corpus by asymmetric distance — measures
+      // pure quantization error (no candidate restriction to confound it)
+      .union(recallOf(top10(pqScoredOver(c), col("adist")), brute, "pq"))
   }
 
   val annRecallSql: String =
-    s"""WITH e0 AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
-      |planes AS (
-      |  SELECT j, list_transform(generate_series(0, 63),
-      |           d -> ('0x' || substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 8))::BIGINT
-      |                  / 2147483648.0 - 1.0) AS h
-      |  FROM unnest(generate_series(0, 7)) AS t(j)),
-      |signs AS (
-      |  SELECT e0.vec_id, p.j,
-      |         CASE WHEN list_sum(list_transform(list_zip(e0.v, p.h), q -> q[1] * q[2])) >= 0
-      |              THEN CAST(pow(2.0, p.j) AS BIGINT) ELSE 0 END AS bit
-      |  FROM e0, planes p),
-      |b AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS bucket FROM signs GROUP BY vec_id),
-      |e AS (SELECT e0.*, b.bucket FROM e0 JOIN b USING (vec_id)),
-      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket AS qbucket
-      |      FROM e WHERE vec_id < 10),
-      |bscored AS (
-      |  SELECT q.query_id, e.vec_id,
-      |         list_sum(list_transform(list_zip(e.v, q.qv), p -> p[1] * p[2])) / (e.nrm * q.qn) AS cosine
-      |  FROM e, q WHERE e.vec_id <> q.query_id),
-      |brute AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM bscored)
-      |  WHERE rank <= 10),
-      |lscored AS (
-      |  SELECT q.query_id, e.vec_id,
-      |         list_sum(list_transform(list_zip(e.v, q.qv), p -> p[1] * p[2])) / (e.nrm * q.qn) AS cosine
-      |  FROM e JOIN q ON e.bucket = q.qbucket AND e.vec_id <> q.query_id),
-      |lsh AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM lscored)
-      |  WHERE rank <= 10),
-      |$ivfSchedCte,
-      |cents AS (SELECT vec_id AS cid, v AS cv FROM e0 WHERE vec_id < (SELECT k FROM isched)),
-      |dists AS (
-      |  SELECT e0.vec_id, e0.v, e0.nrm, c.cid,
-      |         list_sum(list_transform(list_zip(e0.v, c.cv),
-      |                                 p -> (p[1] - p[2]) * (p[1] - p[2]))) AS dist
-      |  FROM e0 CROSS JOIN cents c),
-      |lists AS (
-      |  SELECT vec_id, cid
-      |  FROM (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk
-      |        FROM dists)
-      |  WHERE rk = 1),
-      |probes AS (
-      |  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cid
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk
-      |        FROM dists WHERE vec_id < 10)
-      |  WHERE rk <= 2),
+    s"""WITH $lshChainCte,
+      |${cosineCte("bscored", "e, q WHERE e.vec_id <> q.query_id")},
+      |${top10Cte("brute", "bscored")},
+      |${lshScoredCte("lscored")},
+      |${top10Cte("lsh", "lscored")},
+      |${ivfProbeCte("e0")},
       |iscored AS (
       |  SELECT p.query_id, e0.vec_id,
       |         list_sum(list_transform(list_zip(e0.v, p.qv), z -> z[1] * z[2])) / (e0.nrm * p.qn) AS cosine
       |  FROM e0 JOIN lists l ON e0.vec_id = l.vec_id
       |         JOIN probes p ON l.cid = p.cid
       |  WHERE e0.vec_id <> p.query_id),
-      |ivf AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM iscored)
-      |  WHERE rank <= 10),
+      |${top10Cte("ivf", "iscored")},
       |psub AS (
       |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
       |  FROM e0, unnest(generate_series(0, 7)) AS t(s)),
@@ -1376,28 +1267,8 @@ object Similarity {
       |  FROM pcodes c JOIN pqd g ON g.s = c.s AND g.cid = c.cid
       |  WHERE c.vec_id <> g.query_id
       |  GROUP BY c.vec_id, g.query_id),
-      |pq AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id
-      |                 ORDER BY d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7, vec_id) AS rank
-      |        FROM pagg)
-      |  WHERE rank <= 10),
-      |rec AS (
-      |  SELECT a.query_id, 'lsh' AS method, count(*) AS n_retrieved, count(b.vec_id) AS n_hits
-      |  FROM lsh a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'ivf', count(*), count(b.vec_id)
-      |  FROM ivf a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'pq', count(*), count(b.vec_id)
-      |  FROM pq a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id)
-      |SELECT query_id, method, n_retrieved, n_hits,
-      |       round(CAST(n_hits AS DOUBLE) / 10, 6) + 0 AS recall_at_10
-      |FROM rec""".stripMargin
+      |${top10Cte("pq", "pagg", byAdistSql)},
+      |${recallSql(Seq(("lsh", "lsh", "brute"), ("ivf", "ivf", "brute"), ("pq", "pq", "brute")))}""".stripMargin
 
   /** Recall@10 acceptance sheet over every DEPLOYABLE index: `ivf2`
     * (two-level routed search, nprobe 2), `lsh_mp` (L = 8 multi-table
@@ -1412,31 +1283,12 @@ object Similarity {
     * probe rather than a rewrite of [[annRecall]], so the historical
     * single-index rows keep their committed oracle unchanged. */
   def annRecall2(spark: SparkSession, dir: String): DataFrame = {
-    val k = 10
-    def top10(scored: DataFrame): DataFrame =
-      scored.withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-        .filter(col("rank") <= k).select(col("query_id"), col("vec_id"))
     val brute = top10(bruteScored(spark, dir))
-    def recallAgainst(approx: DataFrame, truth: DataFrame, method: String): DataFrame =
-      approx.alias("a").join(truth.alias("b"),
-          col("a.query_id") === col("b.query_id") && col("a.vec_id") === col("b.vec_id"),
-          "left")
-        .groupBy(col("a.query_id").as("query_id"))
-        .agg(count(lit(1)).as("n_retrieved"), count(col("b.vec_id")).as("n_hits"))
-        .select(col("query_id"), lit(method).as("method"),
-          col("n_retrieved"), col("n_hits"),
-          round(col("n_hits").cast("double") / k, 6).as("recall_at_10"))
-    def recallOf(approx: DataFrame, method: String): DataFrame =
-      recallAgainst(approx, brute, method)
     // PQ orders by ASYMMETRIC DISTANCE (ascending), not cosine — its
     // own cut, same ground truth
-    def adistTop(scored: DataFrame): DataFrame = scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))))
-      .filter(col("rank") <= k).select(col("query_id"), col("vec_id"))
-    val pqTop = adistTop(pqScored(spark, dir))
-    val opqTop = adistTop(opqScored(spark, dir))
+    val adist = col("adist")
+    val pqTop = top10(pqScored(spark, dir), adist)
+    val opqTop = top10(opqScored(spark, dir), adist)
     // r16: the ivf2 and ivfsq rows route through the STORED index
     // tables (one markered build per corpus — the frames the serve
     // rows already read) instead of re-running the n×k1 assignment
@@ -1448,29 +1300,29 @@ object Similarity {
     // the inline half of the round-trip proof, and pq/opq have no
     // stored index to read.
     val (s2, g2, a2) = StoredIndex.readIvf2(spark, ivf2Stored(spark, dir))
-    recallOf(top10(ivf2Route(corpus(spark, dir), s2, g2, a2)), "ivf2")
-      .union(recallOf(top10(lshMpCandidates(spark, dir)), "lsh_mp"))
+    recallOf(top10(ivf2Route(corpus(spark, dir), s2, g2, a2)), brute, "ivf2")
+      .union(recallOf(top10(lshMpCandidates(spark, dir)), brute, "lsh_mp"))
       // r12: the SQ8 index joins the acceptance sheet — its stage-1
       // quantized top-10 against the same exact ground truth
-      .union(recallOf(top10(sq8Scored(spark, dir)), "sq8"))
+      .union(recallOf(top10(sq8Scored(spark, dir)), brute, "sq8"))
       // r13: the sheet covers every DEPLOYABLE index — `pq` (the 32×
       // compression point) and `sq8_serve` (the stored-int8 table the
       // production path actually scans; bit-identical to `sq8` by the
       // lossless TINYINT round-trip, and this row PROVES it through
       // the oracle, not just the spec)
-      .union(recallOf(pqTop, "pq"))
+      .union(recallOf(pqTop, brute, "pq"))
       .union(recallOf(top10(
-        sq8ScoredOver(spark, dir, sq8View(spark, sq8Stored(spark, dir)))), "sq8_serve"))
+        sq8ScoredOver(spark, dir, sq8View(spark, sq8Stored(spark, dir)))), brute, "sq8_serve"))
       // the composed production index: routing-bounded recall, scored
       // through the quantized list scan (stored frames — see above)
       .union(recallOf(top10(ivfSqScoredOver(spark, dir, s2, g2, a2,
-        sq8View(spark, sq8Stored(spark, dir)))), "ivfsq"))
+        sq8View(spark, sq8Stored(spark, dir)))), brute, "ivfsq"))
       // r14: `opq` — PQ behind the fixed orthogonal rotation at the
       // SAME 8-byte code size; on this isotropic fixture the honest
       // measured delta vs `pq` is ≈ 0 (no energy imbalance to fix —
       // see [[annOpqSearch]]); the row is how an anisotropic corpus
       // would surface the standard OPQ win
-      .union(recallOf(opqTop, "opq"))
+      .union(recallOf(opqTop, brute, "opq"))
       // r15: the ANISOTROPIC regime the opq row could not show on the
       // isotropic fixture — a deterministic energy-concentrated corpus
       // variant ([[anisoCorpus]]: dim j scaled by the exact 2^-(j/8),
@@ -1481,10 +1333,10 @@ object Similarity {
       // fixed 4-bit budget per subspace quantizes signal, not dead
       // dims) and the sheet carries the measured opq>pq delta next to
       // the honest isotropic null — both regimes, one acceptance row.
-      .union(recallAgainst(adistTop(pqScoredOver(anisoCorpus(spark, dir))),
+      .union(recallOf(top10(pqScoredOver(anisoCorpus(spark, dir)), adist),
         anisoBrute(spark, dir), "pq_aniso"))
-      .union(recallAgainst(adistTop(pqScoredOver(anisoCorpus(spark, dir)
-          .select(col("vec_id"), hdRotate(col("v")).as("v")))),
+      .union(recallOf(top10(pqScoredOver(anisoCorpus(spark, dir)
+          .select(col("vec_id"), hdRotate(col("v")).as("v"))), adist),
         anisoBrute(spark, dir), "opq_aniso"))
   }
 
@@ -1506,59 +1358,33 @@ object Similarity {
     * cut as the main sheet's `brute`) — memoized like the isotropic
     * ground truth: both aniso rows re-read it. */
   private def anisoBrute(spark: SparkSession, dir: String): DataFrame =
-    DirMemo.getOrCompute(spark, "ann_aniso_brute", dir) {
-      val c = anisoCorpus(spark, dir).withColumn("nrm", norm(col("v")))
-      val q = c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (dot(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("cosine"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-        .filter(col("rank") <= 10).select(col("query_id"), col("vec_id"))
-        .localCheckpoint()
-    }
+    DirMemo.getOrCompute(spark, "ann_aniso_brute", dir)(
+      top10(exactScored(anisoCorpus(spark, dir).withColumn("nrm", norm(col("v")))))
+        .localCheckpoint())
 
-  val annRecall2Sql: String =
-    s"""WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
+  val annRecall2Sql: String = {
+    val recall = recallSql(
+      Seq(("ivf2", "i2top", "brute"), ("lsh_mp", "mptop", "brute"),
+        ("sq8", "sq8top", "brute"), ("pq", "pqtop", "brute"), ("sq8_serve", "sq8top", "brute"),
+        ("ivfsq", "ivfsqtop", "brute"), ("opq", "opqtop", "brute"),
+        ("pq_aniso", "apqtop", "abrute"), ("opq_aniso", "aopqtop", "abrute")),
+      Map(
+        "sq8_serve" ->
+          """  -- the engine's sq8_serve row scans the STORED int8 table; its
+            |  -- stage-1 scores round-trip TINYINT losslessly, so the oracle
+            |  -- derivation is the same quantized top-10""".stripMargin,
+        "pq_aniso" ->
+          """  -- the anisotropic regime: same kernels, energy-concentrated
+            |  -- corpus, ground truth recomputed exact on it""".stripMargin))
+    s"""WITH ${normCte("e")},
       |qb AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM e WHERE vec_id < 10),
-      |bscored AS (
-      |  SELECT qb.query_id, e.vec_id,
-      |         list_sum(list_transform(list_zip(e.v, qb.qv), p -> p[1] * p[2])) / (e.nrm * qb.qn) AS cosine
-      |  FROM e, qb WHERE e.vec_id <> qb.query_id),
-      |brute AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM bscored)
-      |  WHERE rank <= 10),
+      |${cosineCte("bscored", "e, qb WHERE e.vec_id <> qb.query_id", q = "qb")},
+      |${top10Cte("brute", "bscored")},
       |$ivf2CandCte,
       |$lshMpCandCte,
-      |i2top AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM cand)
-      |  WHERE rank <= 10),
-      |mptop AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM mscored)
-      |  WHERE rank <= 10),
-      |sq8n AS (
-      |  SELECT vec_id,
-      |         CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-      |              THEN list_transform(v, x -> greatest(-127.0, least(127.0,
-      |                     floor(x * 127 / list_max(list_transform(v, y -> abs(y)))))))
-      |              ELSE list_transform(v, x -> 0.0) END AS q
-      |  FROM e),
-      |sq8qn AS (
-      |  SELECT vec_id, q, sqrt(list_sum(list_transform(q, x -> x * x))) AS qn
-      |  FROM sq8n),
+      |${top10Cte("i2top", "cand")},
+      |${top10Cte("mptop", "mscored")},
+      |${sqQuantCte("sq8n", "sq8qn")},
       |sq8q AS (SELECT vec_id AS query_id, q AS qq, qn AS qqn
       |         FROM sq8qn WHERE vec_id < 10),
       |sscored8 AS (
@@ -1566,89 +1392,12 @@ object Similarity {
       |         list_sum(list_transform(list_zip(c.q, sq8q.qq), p -> p[1] * p[2]))
       |           / nullif(c.qn * sq8q.qqn, 0) AS cosine
       |  FROM sq8qn c, sq8q WHERE c.vec_id <> sq8q.query_id),
-      |sq8top AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM sscored8)
-      |  WHERE rank <= 10),
-      |pqsub AS (
-      |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
-      |  FROM e, unnest(generate_series(0, 7)) AS t(s)),
-      |pqcsub AS (SELECT vec_id AS cid, s, sub AS csub FROM pqsub WHERE vec_id < 16),
-      |pqd AS (
-      |  SELECT p.vec_id, p.s, c.cid,
-      |         list_sum(list_transform(list_zip(p.sub, c.csub),
-      |                                 q -> (q[1] - q[2]) * (q[1] - q[2]))) AS d
-      |  FROM pqsub p JOIN pqcsub c USING (s)),
-      |pqcodes AS (
-      |  SELECT vec_id, s, cid
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, cid) AS rk
-      |        FROM pqd)
-      |  WHERE rk = 1),
-      |pqqd AS (SELECT vec_id AS query_id, s, cid, d FROM pqd WHERE vec_id < 10),
-      |pqagg AS (
-      |  SELECT c.vec_id, q.query_id,
-      |         sum(CASE WHEN c.s = 0 THEN q.d END) AS d0,
-      |         sum(CASE WHEN c.s = 1 THEN q.d END) AS d1,
-      |         sum(CASE WHEN c.s = 2 THEN q.d END) AS d2,
-      |         sum(CASE WHEN c.s = 3 THEN q.d END) AS d3,
-      |         sum(CASE WHEN c.s = 4 THEN q.d END) AS d4,
-      |         sum(CASE WHEN c.s = 5 THEN q.d END) AS d5,
-      |         sum(CASE WHEN c.s = 6 THEN q.d END) AS d6,
-      |         sum(CASE WHEN c.s = 7 THEN q.d END) AS d7
-      |  FROM pqcodes c JOIN pqqd q ON q.s = c.s AND q.cid = c.cid
-      |  WHERE c.vec_id <> q.query_id
-      |  GROUP BY c.vec_id, q.query_id),
-      |pqtop AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id
-      |                 ORDER BY d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7, vec_id) AS rank
-      |        FROM pqagg)
-      |  WHERE rank <= 10),
-      |rote AS (
-      |  SELECT vec_id,
-      |         list_transform(generate_series(0, 63), i ->
-      |           list_sum(list_transform(generate_series(0, 63), j ->
-      |             CASE WHEN (bit_count(i & j) + bit_count(j)) % 2 = 0
-      |                  THEN v[j+1] ELSE -v[j+1] END)) / 8.0) AS v
-      |  FROM e),
-      |opqsub AS (
-      |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
-      |  FROM rote, unnest(generate_series(0, 7)) AS t(s)),
-      |opqcsub AS (SELECT vec_id AS cid, s, sub AS csub FROM opqsub WHERE vec_id < 16),
-      |opqd AS (
-      |  SELECT p.vec_id, p.s, c.cid,
-      |         list_sum(list_transform(list_zip(p.sub, c.csub),
-      |                                 q -> (q[1] - q[2]) * (q[1] - q[2]))) AS d
-      |  FROM opqsub p JOIN opqcsub c USING (s)),
-      |opqcodes AS (
-      |  SELECT vec_id, s, cid
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, cid) AS rk
-      |        FROM opqd)
-      |  WHERE rk = 1),
-      |opqqd AS (SELECT vec_id AS query_id, s, cid, d FROM opqd WHERE vec_id < 10),
-      |opqagg AS (
-      |  SELECT c.vec_id, q.query_id,
-      |         sum(CASE WHEN c.s = 0 THEN q.d END) AS d0,
-      |         sum(CASE WHEN c.s = 1 THEN q.d END) AS d1,
-      |         sum(CASE WHEN c.s = 2 THEN q.d END) AS d2,
-      |         sum(CASE WHEN c.s = 3 THEN q.d END) AS d3,
-      |         sum(CASE WHEN c.s = 4 THEN q.d END) AS d4,
-      |         sum(CASE WHEN c.s = 5 THEN q.d END) AS d5,
-      |         sum(CASE WHEN c.s = 6 THEN q.d END) AS d6,
-      |         sum(CASE WHEN c.s = 7 THEN q.d END) AS d7
-      |  FROM opqcodes c JOIN opqqd q ON q.s = c.s AND q.cid = c.cid
-      |  WHERE c.vec_id <> q.query_id
-      |  GROUP BY c.vec_id, q.query_id),
-      |opqtop AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id
-      |                 ORDER BY d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7, vec_id) AS rank
-      |        FROM opqagg)
-      |  WHERE rank <= 10),
+      |${top10Cte("sq8top", "sscored8")},
+      |${pqAdcCte("pq", "e")},
+      |${top10Cte("pqtop", "pqagg", byAdistSql)},
+      |${rotCte("rote", "e")},
+      |${pqAdcCte("opq", "rote")},
+      |${top10Cte("opqtop", "opqagg", byAdistSql)},
       |aniso AS (
       |  SELECT vec_id,
       |         list_transform(generate_series(0, 63), j -> v[j+1] / pow(2.0, j // 8)) AS v
@@ -1657,93 +1406,13 @@ object Similarity {
       |  SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
       |  FROM aniso),
       |aqb AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM anison WHERE vec_id < 10),
-      |abscored AS (
-      |  SELECT aqb.query_id, c.vec_id,
-      |         list_sum(list_transform(list_zip(c.v, aqb.qv), p -> p[1] * p[2])) / (c.nrm * aqb.qn) AS cosine
-      |  FROM anison c, aqb WHERE c.vec_id <> aqb.query_id),
-      |abrute AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM abscored)
-      |  WHERE rank <= 10),
-      |apqsub AS (
-      |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
-      |  FROM aniso, unnest(generate_series(0, 7)) AS t(s)),
-      |apqcsub AS (SELECT vec_id AS cid, s, sub AS csub FROM apqsub WHERE vec_id < 16),
-      |apqd AS (
-      |  SELECT p.vec_id, p.s, c.cid,
-      |         list_sum(list_transform(list_zip(p.sub, c.csub),
-      |                                 q -> (q[1] - q[2]) * (q[1] - q[2]))) AS d
-      |  FROM apqsub p JOIN apqcsub c USING (s)),
-      |apqcodes AS (
-      |  SELECT vec_id, s, cid
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, cid) AS rk
-      |        FROM apqd)
-      |  WHERE rk = 1),
-      |apqqd AS (SELECT vec_id AS query_id, s, cid, d FROM apqd WHERE vec_id < 10),
-      |apqagg AS (
-      |  SELECT c.vec_id, q.query_id,
-      |         sum(CASE WHEN c.s = 0 THEN q.d END) AS d0,
-      |         sum(CASE WHEN c.s = 1 THEN q.d END) AS d1,
-      |         sum(CASE WHEN c.s = 2 THEN q.d END) AS d2,
-      |         sum(CASE WHEN c.s = 3 THEN q.d END) AS d3,
-      |         sum(CASE WHEN c.s = 4 THEN q.d END) AS d4,
-      |         sum(CASE WHEN c.s = 5 THEN q.d END) AS d5,
-      |         sum(CASE WHEN c.s = 6 THEN q.d END) AS d6,
-      |         sum(CASE WHEN c.s = 7 THEN q.d END) AS d7
-      |  FROM apqcodes c JOIN apqqd q ON q.s = c.s AND q.cid = c.cid
-      |  WHERE c.vec_id <> q.query_id
-      |  GROUP BY c.vec_id, q.query_id),
-      |apqtop AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id
-      |                 ORDER BY d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7, vec_id) AS rank
-      |        FROM apqagg)
-      |  WHERE rank <= 10),
-      |arote AS (
-      |  SELECT vec_id,
-      |         list_transform(generate_series(0, 63), i ->
-      |           list_sum(list_transform(generate_series(0, 63), j ->
-      |             CASE WHEN (bit_count(i & j) + bit_count(j)) % 2 = 0
-      |                  THEN v[j+1] ELSE -v[j+1] END)) / 8.0) AS v
-      |  FROM aniso),
-      |aopqsub AS (
-      |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
-      |  FROM arote, unnest(generate_series(0, 7)) AS t(s)),
-      |aopqcsub AS (SELECT vec_id AS cid, s, sub AS csub FROM aopqsub WHERE vec_id < 16),
-      |aopqd AS (
-      |  SELECT p.vec_id, p.s, c.cid,
-      |         list_sum(list_transform(list_zip(p.sub, c.csub),
-      |                                 q -> (q[1] - q[2]) * (q[1] - q[2]))) AS d
-      |  FROM aopqsub p JOIN aopqcsub c USING (s)),
-      |aopqcodes AS (
-      |  SELECT vec_id, s, cid
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, cid) AS rk
-      |        FROM aopqd)
-      |  WHERE rk = 1),
-      |aopqqd AS (SELECT vec_id AS query_id, s, cid, d FROM aopqd WHERE vec_id < 10),
-      |aopqagg AS (
-      |  SELECT c.vec_id, q.query_id,
-      |         sum(CASE WHEN c.s = 0 THEN q.d END) AS d0,
-      |         sum(CASE WHEN c.s = 1 THEN q.d END) AS d1,
-      |         sum(CASE WHEN c.s = 2 THEN q.d END) AS d2,
-      |         sum(CASE WHEN c.s = 3 THEN q.d END) AS d3,
-      |         sum(CASE WHEN c.s = 4 THEN q.d END) AS d4,
-      |         sum(CASE WHEN c.s = 5 THEN q.d END) AS d5,
-      |         sum(CASE WHEN c.s = 6 THEN q.d END) AS d6,
-      |         sum(CASE WHEN c.s = 7 THEN q.d END) AS d7
-      |  FROM aopqcodes c JOIN aopqqd q ON q.s = c.s AND q.cid = c.cid
-      |  WHERE c.vec_id <> q.query_id
-      |  GROUP BY c.vec_id, q.query_id),
-      |aopqtop AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id
-      |                 ORDER BY d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7, vec_id) AS rank
-      |        FROM aopqagg)
-      |  WHERE rank <= 10),
+      |${cosineCte("abscored", "anison c, aqb WHERE c.vec_id <> aqb.query_id", "c", "aqb")},
+      |${top10Cte("abrute", "abscored")},
+      |${pqAdcCte("apq", "aniso")},
+      |${top10Cte("apqtop", "apqagg", byAdistSql)},
+      |${rotCte("arote", "aniso")},
+      |${pqAdcCte("aopq", "arote")},
+      |${top10Cte("aopqtop", "aopqagg", byAdistSql)},
       |ivfsqscored AS (
       |  SELECT p.query_id, c.vec_id,
       |         list_sum(list_transform(list_zip(c.q, sq8q.qq), z -> z[1] * z[2]))
@@ -1752,56 +1421,9 @@ object Similarity {
       |               JOIN probes p ON l.cid = p.cid
       |               JOIN sq8q ON sq8q.query_id = p.query_id
       |  WHERE c.vec_id <> p.query_id),
-      |ivfsqtop AS (
-      |  SELECT query_id, vec_id
-      |  FROM (SELECT query_id, vec_id,
-      |               row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM ivfsqscored)
-      |  WHERE rank <= 10),
-      |rec AS (
-      |  SELECT a.query_id, 'ivf2' AS method, count(*) AS n_retrieved, count(b.vec_id) AS n_hits
-      |  FROM i2top a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'lsh_mp', count(*), count(b.vec_id)
-      |  FROM mptop a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'sq8', count(*), count(b.vec_id)
-      |  FROM sq8top a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'pq', count(*), count(b.vec_id)
-      |  FROM pqtop a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  -- the engine's sq8_serve row scans the STORED int8 table; its
-      |  -- stage-1 scores round-trip TINYINT losslessly, so the oracle
-      |  -- derivation is the same quantized top-10
-      |  SELECT a.query_id, 'sq8_serve', count(*), count(b.vec_id)
-      |  FROM sq8top a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'ivfsq', count(*), count(b.vec_id)
-      |  FROM ivfsqtop a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'opq', count(*), count(b.vec_id)
-      |  FROM opqtop a LEFT JOIN brute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  -- the anisotropic regime: same kernels, energy-concentrated
-      |  -- corpus, ground truth recomputed exact on it
-      |  SELECT a.query_id, 'pq_aniso', count(*), count(b.vec_id)
-      |  FROM apqtop a LEFT JOIN abrute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id
-      |  UNION ALL
-      |  SELECT a.query_id, 'opq_aniso', count(*), count(b.vec_id)
-      |  FROM aopqtop a LEFT JOIN abrute b ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      |  GROUP BY a.query_id)
-      |SELECT query_id, method, n_retrieved, n_hits,
-      |       round(CAST(n_hits AS DOUBLE) / 10, 6) + 0 AS recall_at_10
-      |FROM rec""".stripMargin
+      |${top10Cte("ivfsqtop", "ivfsqscored")},
+      |$recall""".stripMargin
+  }
 
   // ---------------------------------------------------------------- ndcg
   /** NDCG@10 of the LSH ranking — recall counts WHICH of the true
@@ -1819,20 +1441,10 @@ object Similarity {
     * query-side joins as [[annRecall]]; scoring adds one window per
     * method over ≤10·|queries| rows. */
   def rankNdcg(spark: SparkSession, dir: String): DataFrame = {
-    val k = 10
-    val c = bucketedCorpus(spark, dir)
-    val q = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("bucket").as("qbucket"))
-    val cos = dot(col("v"), col("qv")) / (col("nrm") * col("qn"))
     val grade = when(col("cosine") >= 0.6, 3).when(col("cosine") >= 0.4, 2)
       .when(col("cosine") >= 0.2, 1).otherwise(0)
     def dcgOf(scored: DataFrame, method: String): DataFrame =
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine").desc, col("vec_id"))))
-        .filter(col("rank") <= k)
+      topK(scored, 10)
         .withColumn("g", grade)
         .groupBy(col("query_id"))
         .agg(count(lit(1)).as("n_retrieved"),
@@ -1840,9 +1452,7 @@ object Similarity {
         .select(col("query_id"), lit(method).as("method"),
           col("n_retrieved"), col("dcg"))
     val brute = dcgOf(bruteScored(spark, dir), "exact").localCheckpoint()
-    val lsh = dcgOf(c.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cos), "lsh")
+    val lsh = dcgOf(lshScored(bucketedCorpus(spark, dir)), "lsh")
     brute.unionByName(lsh)
       .join(brute.select(col("query_id"), col("dcg").as("idcg")), "query_id")
       .select(col("query_id"), col("method"), col("n_retrieved"),
@@ -1850,54 +1460,28 @@ object Similarity {
         round(col("dcg") / col("idcg"), 6).as("ndcg"))
   }
 
-  val rankNdcgSql: String =
-    """WITH e0 AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
-      |planes AS (
-      |  SELECT j, list_transform(generate_series(0, 63),
-      |           d -> ('0x' || substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 8))::BIGINT
-      |                  / 2147483648.0 - 1.0) AS h
-      |  FROM unnest(generate_series(0, 7)) AS t(j)),
-      |signs AS (
-      |  SELECT e0.vec_id, p.j,
-      |         CASE WHEN list_sum(list_transform(list_zip(e0.v, p.h), q -> q[1] * q[2])) >= 0
-      |              THEN CAST(pow(2.0, p.j) AS BIGINT) ELSE 0 END AS bit
-      |  FROM e0, planes p),
-      |b AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS bucket FROM signs GROUP BY vec_id),
-      |e AS (SELECT e0.*, b.bucket FROM e0 JOIN b USING (vec_id)),
-      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket AS qbucket
-      |      FROM e WHERE vec_id < 10),
-      |bscored AS (
-      |  SELECT q.query_id, e.vec_id,
-      |         list_sum(list_transform(list_zip(e.v, q.qv), p -> p[1] * p[2])) / (e.nrm * q.qn) AS cosine
-      |  FROM e JOIN q ON e.vec_id <> q.query_id),
-      |lscored AS (
-      |  SELECT q.query_id, e.vec_id,
-      |         list_sum(list_transform(list_zip(e.v, q.qv), p -> p[1] * p[2])) / (e.nrm * q.qn) AS cosine
-      |  FROM e JOIN q ON e.bucket = q.qbucket AND e.vec_id <> q.query_id),
-      |bdcg AS (
-      |  SELECT query_id, 'exact' AS method, count(*) AS n_retrieved,
-      |         sum((pow(2.0, CASE WHEN cosine >= 0.6 THEN 3 WHEN cosine >= 0.4 THEN 2
-      |                            WHEN cosine >= 0.2 THEN 1 ELSE 0 END) - 1)
-      |             / log2(rank + 1)) AS dcg
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-      |                                     ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM bscored) WHERE rank <= 10 GROUP BY query_id),
-      |ldcg AS (
-      |  SELECT query_id, 'lsh' AS method, count(*) AS n_retrieved,
-      |         sum((pow(2.0, CASE WHEN cosine >= 0.6 THEN 3 WHEN cosine >= 0.4 THEN 2
-      |                            WHEN cosine >= 0.2 THEN 1 ELSE 0 END) - 1)
-      |             / log2(rank + 1)) AS dcg
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-      |                                     ORDER BY cosine DESC, vec_id) AS rank
-      |        FROM lscored) WHERE rank <= 10 GROUP BY query_id),
-      |u AS (SELECT * FROM bdcg UNION ALL SELECT * FROM ldcg)
-      |SELECT u.query_id, u.method, u.n_retrieved,
-      |       round(u.dcg, 6) + 0 AS dcg,
-      |       round(u.dcg / i.dcg, 6) + 0 AS ndcg
-      |FROM u JOIN bdcg i ON i.query_id = u.query_id""".stripMargin
+  val rankNdcgSql: String = {
+    // the mirror of rankNdcg's dcgOf: graded DCG over one method's top-10
+    def dcg(name: String, method: String, src: String): String =
+      s"""$name AS (
+         |  SELECT query_id, '$method' AS method, count(*) AS n_retrieved,
+         |         sum((pow(2.0, CASE WHEN cosine >= 0.6 THEN 3 WHEN cosine >= 0.4 THEN 2
+         |                            WHEN cosine >= 0.2 THEN 1 ELSE 0 END) - 1)
+         |             / log2(rank + 1)) AS dcg
+         |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+         |                                     ORDER BY cosine DESC, vec_id) AS rank
+         |        FROM $src) WHERE rank <= 10 GROUP BY query_id)""".stripMargin
+    s"""WITH $lshChainCte,
+       |${cosineCte("bscored", "e JOIN q ON e.vec_id <> q.query_id")},
+       |${lshScoredCte("lscored")},
+       |${dcg("bdcg", "exact", "bscored")},
+       |${dcg("ldcg", "lsh", "lscored")},
+       |u AS (SELECT * FROM bdcg UNION ALL SELECT * FROM ldcg)
+       |SELECT u.query_id, u.method, u.n_retrieved,
+       |       round(u.dcg, 6) + 0 AS dcg,
+       |       round(u.dcg / i.dcg, 6) + 0 AS ndcg
+       |FROM u JOIN bdcg i ON i.query_id = u.query_id""".stripMargin
+  }
 
   // ---------------------------------------------------------------- ts search
   /** Time-series subsequence similarity search (the pattern-matching
@@ -2017,17 +1601,43 @@ object Similarity {
           .as("code"))
   }
 
+  /** Oracle CTE chain of the PQ codebook over `src(vec_id, v)`, every
+    * name prefixed `p`: `sub` (the 8-dim slices [[pqPieces]] cuts),
+    * `csub` (the `vec_id < 16` sub-centroids) and `d` (slice ×
+    * sub-centroid squared distances, [[pqSubDist]]). */
+  private def pqDistCte(p: String, src: String): String =
+    s"""${p}sub AS (
+       |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
+       |  FROM $src, unnest(generate_series(0, 7)) AS t(s)),
+       |${p}csub AS (SELECT vec_id AS cid, s, sub AS csub FROM ${p}sub WHERE vec_id < 16),
+       |${p}d AS (
+       |  SELECT p.vec_id, p.s, c.cid,
+       |         list_sum(list_transform(list_zip(p.sub, c.csub),
+       |                                 q -> (q[1] - q[2]) * (q[1] - q[2]))) AS d
+       |  FROM ${p}sub p JOIN ${p}csub c USING (s))""".stripMargin
+
+  /** [[pqDistCte]] plus the ADC scoring of [[pqScoredOver]]: `codes`
+    * (each vector's nearest sub-centroid per subspace), `qd` (the query
+    * lookup table) and `agg` (the eight per-subspace partial distances
+    * of each (vector, query) pair, `d0` … `d7`). */
+  private def pqAdcCte(p: String, src: String): String =
+    s"""${pqDistCte(p, src)},
+       |${p}codes AS (
+       |  SELECT vec_id, s, cid
+       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, cid) AS rk
+       |        FROM ${p}d)
+       |  WHERE rk = 1),
+       |${p}qd AS (SELECT vec_id AS query_id, s, cid, d FROM ${p}d WHERE vec_id < 10),
+       |${p}agg AS (
+       |  SELECT c.vec_id, q.query_id,
+       |${(0 until 8).map(i => s"         sum(CASE WHEN c.s = $i THEN q.d END) AS d$i").mkString(",\n")}
+       |  FROM ${p}codes c JOIN ${p}qd q ON q.s = c.s AND q.cid = c.cid
+       |  WHERE c.vec_id <> q.query_id
+       |  GROUP BY c.vec_id, q.query_id)""".stripMargin
+
   val annPqEncodeSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |sub AS (
-      |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
-      |  FROM e, unnest(generate_series(0, 7)) AS t(s)),
-      |csub AS (SELECT vec_id AS cid, s, sub AS csub FROM sub WHERE vec_id < 16),
-      |d AS (
-      |  SELECT p.vec_id, p.s, c.cid,
-      |         list_sum(list_transform(list_zip(p.sub, c.csub),
-      |                                 q -> (q[1] - q[2]) * (q[1] - q[2]))) AS d
-      |  FROM sub p JOIN csub c USING (s)),
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |${pqDistCte("", "e")},
       |code1 AS (
       |  SELECT vec_id, s, cid
       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, cid) AS rk
@@ -2045,12 +1655,7 @@ object Similarity {
     * doubles nondeterministically and flip near-tie ranks vs the
     * oracle). Approximation error vs exact cosine is the PQ trade. */
   def annPqSearch(spark: SparkSession, dir: String): DataFrame =
-    pqScored(spark, dir)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("adist"), 6).as("adist"))
+    neighbors(topK(pqScored(spark, dir), 3, col("adist")), "adist")
 
   /** The ADC-scored (query_id, vec_id, adist) frame behind
     * [[annPqSearch]]'s top-3 cut and the `pq` row of [[annRecall2]]
@@ -2099,34 +1704,7 @@ object Similarity {
     * hazard. */
   private def pqAdcSql(corpusCte: String): String =
     s"""WITH $corpusCte,
-      |sub AS (
-      |  SELECT vec_id, s, v[(s*8+1):(s*8+8)] AS sub
-      |  FROM e, unnest(generate_series(0, 7)) AS t(s)),
-      |csub AS (SELECT vec_id AS cid, s, sub AS csub FROM sub WHERE vec_id < 16),
-      |d AS (
-      |  SELECT p.vec_id, p.s, c.cid,
-      |         list_sum(list_transform(list_zip(p.sub, c.csub),
-      |                                 q -> (q[1] - q[2]) * (q[1] - q[2]))) AS d
-      |  FROM sub p JOIN csub c USING (s)),
-      |codes AS (
-      |  SELECT vec_id, s, cid
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, cid) AS rk
-      |        FROM d)
-      |  WHERE rk = 1),
-      |qd AS (SELECT vec_id AS query_id, s, cid, d FROM d WHERE vec_id < 10),
-      |agg AS (
-      |  SELECT c.vec_id, q.query_id,
-      |         sum(CASE WHEN c.s = 0 THEN q.d END) AS d0,
-      |         sum(CASE WHEN c.s = 1 THEN q.d END) AS d1,
-      |         sum(CASE WHEN c.s = 2 THEN q.d END) AS d2,
-      |         sum(CASE WHEN c.s = 3 THEN q.d END) AS d3,
-      |         sum(CASE WHEN c.s = 4 THEN q.d END) AS d4,
-      |         sum(CASE WHEN c.s = 5 THEN q.d END) AS d5,
-      |         sum(CASE WHEN c.s = 6 THEN q.d END) AS d6,
-      |         sum(CASE WHEN c.s = 7 THEN q.d END) AS d7
-      |  FROM codes c JOIN qd q ON q.s = c.s AND q.cid = c.cid
-      |  WHERE c.vec_id <> q.query_id
-      |  GROUP BY c.vec_id, q.query_id),
+      |${pqAdcCte("", "e")},
       |ranked AS (
       |  SELECT query_id, vec_id,
       |         d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7 AS adist,
@@ -2152,8 +1730,9 @@ object Similarity {
     * bit-for-bit in the DuckDB mirror. Written as one codegen'd
     * expression (d = 64 ⇒ 4096 fused terms per row — a map-side pass;
     * the O(d log d) in-place FWHT would need mapPartitions and fall
-    * out of codegen for no win at this d). */
-  /** r15: the HOF form of this rotation (transform/aggregate/zip_with
+    * out of codegen for no win at this d).
+    *
+    * r15: the HOF form of this rotation (transform/aggregate/zip_with
     * lambdas) evaluated interpreted at ~0.6 ms/vector — see
     * [[graft.functions.HadamardRotate]] for the codegen'd replacement
     * and its bit-identity argument; the DuckDB mirror (opqRotCte) is
@@ -2181,24 +1760,24 @@ object Similarity {
     * ship the rotated path for them; the acceptance sheet is where the
     * per-corpus decision gets made. */
   def annOpqSearch(spark: SparkSession, dir: String): DataFrame =
-    opqScored(spark, dir)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("adist"), 6).as("adist"))
+    neighbors(topK(opqScored(spark, dir), 3, col("adist")), "adist")
 
   /** The rotation CTE (`e0` raw → `e(vec_id, v)` rotated) shared by the
     * opq oracle and the opq row of the recall2 oracle. */
   private val opqRotCte: String =
-    """e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |e AS (
-      |  SELECT vec_id,
-      |         list_transform(generate_series(0, 63), i ->
-      |           list_sum(list_transform(generate_series(0, 63), j ->
-      |             CASE WHEN (bit_count(i & j) + bit_count(j)) % 2 = 0
-      |                  THEN v[j+1] ELSE -v[j+1] END)) / 8.0) AS v
-      |  FROM e0)""".stripMargin
+    s"""e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |${rotCte("e", "e0")}""".stripMargin
+
+  /** CTE `name(vec_id, v)`: `src`'s vectors through the fixed rotation
+    * ([[hdRotate]]). */
+  private def rotCte(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT vec_id,
+       |         list_transform(generate_series(0, 63), i ->
+       |           list_sum(list_transform(generate_series(0, 63), j ->
+       |             CASE WHEN (bit_count(i & j) + bit_count(j)) % 2 = 0
+       |                  THEN v[j+1] ELSE -v[j+1] END)) / 8.0) AS v
+       |  FROM $src)""".stripMargin
 
   // vanilla PQ oracle with the corpus CTE swapped for the rotated one
   val annOpqSearchSql: String = pqAdcSql(opqRotCte)
@@ -2300,22 +1879,13 @@ object Similarity {
     * vector store pays per query), re-rank by exact cosine, keep 3. */
   private[scale] def sq8Rescore(spark: SparkSession, dir: String,
       scored: DataFrame): DataFrame = {
-    val cand = scored
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rk") <= 10)
-      .select(col("query_id"), col("vec_id"))
     val exact = corpus(spark, dir)
     val qx = exact.filter(col("vec_id") < annQueryCount)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnr"))
-    cand.join(exact, Seq("vec_id"))
+    val cand = topK(scored, 10, rank = "rk").select(col("query_id"), col("vec_id"))
+    neighbors(topK(cand.join(exact, Seq("vec_id"))
       .join(qx, Seq("query_id"))
-      .withColumn("cosine", dot(col("v"), col("qv")) / (col("nrm") * col("qnr")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+      .withColumn("cosine", dot(col("v"), col("qv")) / (col("nrm") * col("qnr"))), 3))
   }
 
   /** SCALAR-QUANTIZED ANN with exact re-scoring — the standard two-
@@ -2459,18 +2029,23 @@ object Similarity {
   /** The quantization CTEs shared by the sq8 oracles (→ `sqn(vec_id,
     * q, qn)` over the full corpus). */
   private val sq8QuantCte: String =
-    """e AS (
+    s"""e AS (
       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |sq AS (
-      |  SELECT vec_id,
-      |         CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-      |              THEN list_transform(v, x -> greatest(-127.0, least(127.0,
-      |                     floor(x * 127 / list_max(list_transform(v, y -> abs(y)))))))
-      |              ELSE list_transform(v, x -> 0.0) END AS q
-      |  FROM e),
-      |sqn AS (
-      |  SELECT vec_id, q, sqrt(list_sum(list_transform(q, x -> x * x))) AS qn
-      |  FROM sq)""".stripMargin
+      |${sqQuantCte("sq", "sqn")}""".stripMargin
+
+  /** CTEs `sq(vec_id, q)` and `sqn(vec_id, q, qn)` under the given names:
+    * the quantization of [[sq8Corpus]] over a preceding `e(vec_id, v)`. */
+  private def sqQuantCte(sq: String, sqn: String): String =
+    s"""$sq AS (
+       |  SELECT vec_id,
+       |         CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
+       |              THEN list_transform(v, x -> greatest(-127.0, least(127.0,
+       |                     floor(x * 127 / list_max(list_transform(v, y -> abs(y)))))))
+       |              ELSE list_transform(v, x -> 0.0) END AS q
+       |  FROM e),
+       |$sqn AS (
+       |  SELECT vec_id, q, sqrt(list_sum(list_transform(q, x -> x * x))) AS qn
+       |  FROM $sq)""".stripMargin
 
   val annSq8DeleteSql: String =
     s"""WITH $sq8QuantCte
@@ -2478,26 +2053,6 @@ object Similarity {
       |FROM sqn
       |WHERE vec_id >= (SELECT count(*) // 20 FROM embeddings)""".stripMargin
 
-  /** COMPOSED IVF-SQ8 DELETE — the end-to-end FAISS `remove_ids` for
-    * the production index: one purge predicate applied to BOTH stored
-    * halves (the assignment table AND the int8 corpus, each through
-    * the journaled COW swap), then the composed search served over the
-    * post-delete tables. The purge is SCATTERED — `vec_id % 20 = 13`,
-    * exactly 5% of every id block at every SF (the scaled fixtures'
-    * replica offsets are multiples of 20, and a dense space is
-    * trivially uniform) — deliberately the OPPOSITE workload from the
-    * retention rows' clustered range: a GDPR/user purge hits ids
-    * spread across the table, row-group stats prune NOTHING, every
-    * file censuses dirty, and the COW swap runs its full-rewrite worst
-    * case. Together the delete family now covers both ends: clustered
-    * range → file-pruned COW ([[annIvf2Delete]]/[[annSq8Delete]]);
-    * scattered ids → full rewrite (this row). The query set
-    * (vec_id < 10; 0–9 mod 20 ≠ 13) survives the purge. Centroids and
-    * supers stay — frozen-index semantics, same as [[annIvf2Delete]].
-    * The oracle is the ivfsq search SQL with the purged ids excluded
-    * from the candidate set — equivalent to deleting from both tables
-    * because a stage-1 candidate requires presence in BOTH (the list
-    * entry routes it, the code row scores it). */
   /** The scattered GDPR-purge predicate both composed-delete rows
     * apply — `vec_id % 20 = 13`, exactly 5% of every id block at every
     * SF (modular, so the scaled fixtures' replica-offset id spaces keep
@@ -2524,6 +2079,26 @@ object Similarity {
         "oracle keeps them; shrink SPARK_GRAFT_ANN_QUERIES or change the predicate")
   }
 
+  /** COMPOSED IVF-SQ8 DELETE — the end-to-end FAISS `remove_ids` for
+    * the production index: one purge predicate applied to BOTH stored
+    * halves (the assignment table AND the int8 corpus, each through
+    * the journaled COW swap), then the composed search served over the
+    * post-delete tables. The purge is SCATTERED — `vec_id % 20 = 13`,
+    * exactly 5% of every id block at every SF (the scaled fixtures'
+    * replica offsets are multiples of 20, and a dense space is
+    * trivially uniform) — deliberately the OPPOSITE workload from the
+    * retention rows' clustered range: a GDPR/user purge hits ids
+    * spread across the table, row-group stats prune NOTHING, every
+    * file censuses dirty, and the COW swap runs its full-rewrite worst
+    * case. Together the delete family now covers both ends: clustered
+    * range → file-pruned COW ([[annIvf2Delete]]/[[annSq8Delete]]);
+    * scattered ids → full rewrite (this row). The query set
+    * (vec_id < 10; 0–9 mod 20 ≠ 13) survives the purge. Centroids and
+    * supers stay — frozen-index semantics, same as [[annIvf2Delete]].
+    * The oracle is the ivfsq search SQL with the purged ids excluded
+    * from the candidate set — equivalent to deleting from both tables
+    * because a stage-1 candidate requires presence in BOTH (the list
+    * entry routes it, the code row scores it). */
   def annIvfSqDelete(spark: SparkSession, dir: String): DataFrame = {
     requireQueriesSurvive("ann_ivfsq_delete")
     // r15: the two halves (assignment table, int8 corpus) stage and
@@ -2748,21 +2323,9 @@ object Similarity {
     * the source instead of string-replaced after the fact (the r14
     * verdict's brittleness nit). */
   private def ivfSqSearchSqlWith(candFilter: String): String =
-    s"""WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
+    s"""WITH ${normCte("e")},
       |$ivf2ProbeCte,
-      |sq AS (
-      |  SELECT vec_id,
-      |         CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-      |              THEN list_transform(v, x -> greatest(-127.0, least(127.0,
-      |                     floor(x * 127 / list_max(list_transform(v, y -> abs(y)))))))
-      |              ELSE list_transform(v, x -> 0.0) END AS q
-      |  FROM e),
-      |sqn AS (
-      |  SELECT vec_id, q, sqrt(list_sum(list_transform(q, x -> x * x))) AS qn
-      |  FROM sq),
+      |${sqQuantCte("sq", "sqn")},
       |q8 AS (SELECT vec_id AS query_id, q AS qq, qn AS qqn FROM sqn WHERE vec_id < 10),
       |scored AS (
       |  SELECT p.query_id, c.vec_id,
@@ -2797,10 +2360,7 @@ object Similarity {
   val annIvfSqSearchSql: String = ivfSqSearchSqlWith("")
 
   val annSq8SearchSql: String =
-    """WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-      |  FROM embeddings),
+    s"""WITH ${normCte("e")},
       |sq AS (
       |  SELECT vec_id, v, nrm,
       |         CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
@@ -2838,23 +2398,6 @@ object Similarity {
       |FROM ranked WHERE rank <= 3""".stripMargin
 
   // ---------------------------------------------------------------- k-means
-  /** K-MEANS FIT — the index-training step the IVF family assumes
-    * (`annIvfAssign` takes its centroid set as given): k=8, init =
-    * the first 8 vectors, 3 unrolled Lloyd iterations. Each iteration
-    * is (a) assignment — broadcast the 8 centroids, 64-term ascending-
-    * dimension squared-L2, rank-1 pick on (dist, cid), exactly the
-    * [[annIvfAssign]] plan — and (b) update — per-(cluster, dim) mean
-    * via posexplode + one hash aggregate, re-assembled into an array
-    * ordered by dim. Centroids are QUANTIZED to 6 decimals after every
-    * update, in the engine and the oracle alike: cross-engine mean
-    * summation order can differ in the last ulp, and an unquantized
-    * ulp would flip boundary assignments in the next iteration and
-    * diverge the whole fit. The fixed iteration count keeps the plan a
-    * static 3-deep chain (no driver-side convergence loop) — at 100 TB
-    * each iteration is one broadcast join + two shuffles over (cid,
-    * dim) rows, and the centroid table never leaves the executors.
-    * Output grain: (cid, dim, c, n_members) — the fitted codebook plus
-    * final cluster occupancy. */
   /** Third-iteration Lloyd assignment (vec_id, v, cid) — shared by the
     * fit output and [[Ranking.clusterTopics]]' per-cluster summaries,
     * and read TWICE inside [[kmeansFit]] itself (update + occupancy
@@ -2869,11 +2412,6 @@ object Similarity {
 
   private def kmeansAssign3Impl(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val dist = (0 until 64)
-      .map { d =>
-        val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-        diff * diff
-      }.reduce(_ + _)
     // hash-agg packed argmin (see annIvfAssign); the update step's v is
     // re-attached by an n-row equi-join on vec_id AFTER the aggregate
     // rather than riding in the argmin buffer — min(struct(dist,cid,v))
@@ -2883,7 +2421,7 @@ object Similarity {
     // assignment map-side at corpus scale
     def assign(cents: DataFrame): DataFrame =
       c.join(broadcast(cents), lit(true))
-        .select(col("vec_id"), col("cid"), dist.as("dist"))
+        .select(col("vec_id"), col("cid"), sqDist("v", "cv").as("dist"))
         .groupBy(col("vec_id"))
         .agg(min(packArgmin(col("dist"), col("cid"))).as("p"),
           min(col("dist")).as("d"))
@@ -2904,6 +2442,23 @@ object Similarity {
       .agg(sort_array(collect_list(struct(col("dim"), col("cx")))).as("s"))
       .select(col("cid"), transform(col("s"), p => p("cx")).as("cv"))
 
+  /** K-MEANS FIT — the index-training step the IVF family assumes
+    * (`annIvfAssign` takes its centroid set as given): k=8, init =
+    * the first 8 vectors, 3 unrolled Lloyd iterations. Each iteration
+    * is (a) assignment — broadcast the 8 centroids, 64-term ascending-
+    * dimension squared-L2, rank-1 pick on (dist, cid), exactly the
+    * [[annIvfAssign]] plan — and (b) update — per-(cluster, dim) mean
+    * via posexplode + one hash aggregate, re-assembled into an array
+    * ordered by dim. Centroids are QUANTIZED to 6 decimals after every
+    * update, in the engine and the oracle alike: cross-engine mean
+    * summation order can differ in the last ulp, and an unquantized
+    * ulp would flip boundary assignments in the next iteration and
+    * diverge the whole fit. The fixed iteration count keeps the plan a
+    * static 3-deep chain (no driver-side convergence loop) — at 100 TB
+    * each iteration is one broadcast join + two shuffles over (cid,
+    * dim) rows, and the centroid table never leaves the executors.
+    * Output grain: (cid, dim, c, n_members) — the fitted codebook plus
+    * final cluster occupancy. */
   def kmeansFit(spark: SparkSession, dir: String): DataFrame = {
     val a3 = kmeansAssign3(spark, dir)
     val counts = a3.groupBy(col("cid")).agg(count(lit(1)).as("n_members"))

@@ -68,6 +68,29 @@ object StreamBench {
       lastState.map(_.numRowsTotal).sum, lastState.map(_.memoryUsedBytes).sum)
   }
 
+  /** Every channel [[main]] runs, in run order. */
+  val channels: Seq[String] = Seq("raw_ticks", "order_book", "ml_features",
+    "trading_signals", "technical_analysis", "pattern_alerts", "microstructure",
+    "economic_events", "heikin_ashi", "zigzag_alerts", "renko_bricks", "garch_vol",
+    "trending", "index_near_dup")
+
+  /** The channels a run is restricted to, in run order: all of them
+    * when `spec` (`SPARK_GRAFT_STREAM_CHANNELS`) is unset, else its
+    * comma-separated names. An unknown name or an empty list fails
+    * here, before any session or stream starts — the way
+    * [[graft.SparkEntry.selected]] treats query names: a silently
+    * empty run would print `"channels":{}` and exit 0. */
+  def selectedChannels(spec: Option[String]): Seq[String] = spec match {
+    case None => channels
+    case Some(list) =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, s"channel list '$list' names nothing")
+      val unknown = names -- channels
+      require(unknown.isEmpty,
+        s"names not in the channel list: ${unknown.toSeq.sorted.mkString(", ")}")
+      channels.filter(names)
+  }
+
   def main(args: Array[String]): Unit = {
     val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATE", "2000").toInt
     val seconds = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECONDS", "8").toInt
@@ -80,9 +103,8 @@ object StreamBench {
       .getOrElse(Seq.empty)
     // optional channel filter (comma-separated names) so a targeted
     // saturation push — e.g. the stateful fold family at 50k–100k
-    // ticks/s — doesn't pay for re-running all 13 channels per rate
-    val onlyChannels = sys.env.get("SPARK_GRAFT_STREAM_CHANNELS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // ticks/s — doesn't pay for re-running every channel per rate
+    val onlyChannels = selectedChannels(sys.env.get("SPARK_GRAFT_STREAM_CHANNELS"))
     // key-population knob for the saturation receipt: the stateful fold
     // ceiling should scale with symbol count, not executor count
     val nSymbols = sys.env.getOrElse("SPARK_GRAFT_STREAM_SYMBOLS", "3").toInt
@@ -178,7 +200,8 @@ object StreamBench {
                     - lit(1.0)).as("v"),
                 col("timestamp").as("ts"))))))
 
-      runs.filter(r => onlyChannels.forall(_.contains(r._1))).map { case (name, start) =>
+      require(runs.map(_._1) == channels, "StreamBench.channels must list every run in order")
+      runs.filter(r => onlyChannels.contains(r._1)).map { case (name, start) =>
         val s = measure(start(), seconds)
         System.err.println(s"[streambench] $name@$r: ${s.rows} rows, ${s.batches} batches, " +
           f"${if (s.spanSec > 0) s.rows / s.spanSec else 0.0}%.0f msg/s, ${if (s.rows > 0) s.execMs.toDouble / s.rows else 0.0}%.4f ms/msg")

@@ -1,30 +1,34 @@
 package graft
 
-/** Result drift gate for the ANN family: every `ann_*` registry row
-  * (the public entry and, where one exists, its `benchImpls` serve
-  * read) must reproduce the `BenchAction.consume` (rows, checksum)
-  * recorded at sf0.001. The DuckDB oracle cannot run in-session, so a
-  * refactor of the shared index lifecycle is checked against these
-  * values instead. */
+/** Result drift gate for `scale.Similarity`: every row of
+  * `Similarity.queries` (the ANN family plus the PCA, k-means, int8,
+  * NDCG, projection and time-series rows) and, where one exists, its
+  * `benchImpls` serve read must reproduce the `BenchAction.consume`
+  * (rows, checksum) recorded at sf0.001. The DuckDB oracle cannot run
+  * in-session, so a refactor of the shared index lifecycle or the
+  * shared scoring and top-k helpers is checked against these values
+  * instead. */
 class AnnDriftSpec extends SparkSpec {
 
   test("every ann_* row reproduces its recorded rows and checksum") {
     spark.catalog.clearCache()
-    val rows = SparkEntry.queries.toSeq.filter(_._1.startsWith("ann_")).sortBy(_._1) ++
-      SparkEntry.benchImpls.toSeq.filter(_._1.startsWith("ann_")).sortBy(_._1)
+    val similarity = scale.Similarity.queries.keySet
+    val rows = SparkEntry.queries.toSeq.filter(q => similarity(q._1)).sortBy(_._1) ++
+      SparkEntry.benchImpls.toSeq.filter(q => similarity(q._1)).sortBy(_._1)
         .map { case (k, f) => (s"$k/bench", f) }
     val got = rows.map { case (name, fn) => name -> BenchAction.consume(fn(spark, sfDir)) }
     val drift = got.filter { case (name, nh) => !AnnDriftSpec.expected.get(name).contains(nh) }
     assert(got.size == AnnDriftSpec.expected.size && drift.isEmpty,
-      s"ann_* drift (${got.size} rows run, ${AnnDriftSpec.expected.size} recorded); " +
+      s"Similarity drift (${got.size} rows run, ${AnnDriftSpec.expected.size} recorded); " +
         "observed (rows, checksum):\n  " + drift.mkString("\n  "))
   }
 }
 
 object AnnDriftSpec {
   /** row → (rows, checksum) at sf0.001, recorded twice in separate
-    * JVMs before the stored-index lifecycle was shared; both recordings
-    * agreed on every checksum. */
+    * JVMs before the stored-index lifecycle was shared (the `ann_*`
+    * rows) and again before the scoring and top-k helpers were shared
+    * (the six others); both recordings agreed on every checksum. */
   val expected: Map[String, (Long, Long)] = Seq[(String, Long, Long)](
     ("ann_brute_force", 50L, -3060307938L),
     ("ann_dot_expr", 50L, -3060307938L),
@@ -55,6 +59,12 @@ object AnnDriftSpec {
     ("ann_sq8_delete", 475L, -33138399550L),
     ("ann_sq8_search", 30L, -5261463981L),
     ("ann_sq8_serve", 30L, -5261463981L),
+    ("emb_pca_power", 64L, 5226184400L),
+    ("emb_project", 500L, -66406130042L),
+    ("emb_quantize", 500L, -41608451991L),
+    ("kmeans_fit", 512L, 15438924894L),
+    ("rank_ndcg", 18L, -5054524509L),
+    ("ts_similar_windows", 10L, 806156903L),
     ("ann_ivf2_serve/bench", 30L, -5961254027L),
     ("ann_ivfsq_serve/bench", 30L, -5961254027L),
     ("ann_sq8_serve/bench", 30L, -5261463981L)

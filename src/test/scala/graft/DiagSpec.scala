@@ -43,6 +43,14 @@ class DiagSpec extends SparkSpec {
     }
   }
 
+  test("run explain heads each plan with its name, and bench variants with /bench") {
+    val qs = SparkEntry.selected(Some("q1_agg,ann_sq8_serve")).toSeq.sortBy(_._1)
+    val (_, printed) = quietly(Diag.run(spark, sfDir, qs, explain = true))
+    val headers = printed.linesIterator.filter(l => l.startsWith("== ") && l != "== Physical Plan ==")
+    assert(headers.toSeq == Seq("== ann_sq8_serve ==", "== ann_sq8_serve/bench ==", "== q1_agg =="))
+    assert("== Physical Plan ==".r.findAllIn(printed).size == 3, printed)
+  }
+
   test("graph on graph_kcore prints its run line") {
     val qs = SparkEntry.selected(Some("graph_kcore")).toSeq
     val (_, printed) = quietly(Diag.graph(spark, sfDir, qs))
