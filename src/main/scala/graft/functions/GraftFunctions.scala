@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
@@ -101,15 +102,14 @@ object GraftFunctions {
     * the one quantizer of the int8 corpus and the streamed arrivals. */
   def sq8(v: Column): Column = call_function("graft_sq8", v)
 
-  /** The nprobe = 2 list ids of `v` through the two-level routing tables
-    * ([[IvfProbe]]), best first. */
-  def ivfProbe(v: Column, supers: Column, groups: Column): Column =
-    call_function("graft_ivf_probe", v, supers, groups)
-
-  /** struct(cos, vid): the best quantized-cosine entry of `lists` for the
-    * arrival (`aq`, `aqn`, `self`), self excluded ([[Sq8Best]]). */
-  def sq8Best(aq: Column, aqn: Column, self: Column, lists: Column*): Column =
-    call_function("graft_sq8_best", aq +: aqn +: self +: lists: _*)
+  /** struct(cos, vid): the arrival's best entry over its nprobe = 2 lists
+    * of the broadcast stored-index snapshot, self excluded
+    * ([[IvfSqBest]]). Not a SQL function: it needs the broadcast handle. */
+  def ivfSqBest(v: Column, aq: Column, aqn: Column, self: Column,
+      snapshot: Broadcast[IvfSqSnapshot]): Column = {
+    import org.apache.spark.sql.GraftShim.{column, expression}
+    column(IvfSqBest(expression(v), expression(aq), expression(aqn), expression(self), snapshot))
+  }
 
   /** pandas `ewm(alpha=α, adjust=True).mean()` as a window aggregate. */
   def ewmAvg(c: Column, alpha: Double): Column =

@@ -1,9 +1,13 @@
 package graft.functions
 
+import scala.collection.immutable.LongMap
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow,
-  TernaryExpression, UnaryExpression, UnsafeArrayData}
+  QuaternaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode,
   FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -20,6 +24,8 @@ import org.apache.spark.sql.types._
   * Each kernel is bit-identical to the HOF form it replaces, null
   * elements and arity mismatches included; `NearDupKernelsSpec` checks
   * every one against its HOF on fixture embeddings and adversarial rows.
+  * [[IvfSqBest]], the stream's serve step, runs the probe and best
+  * loops over a broadcast [[IvfSqSnapshot]] of the stored index.
   * Double comparisons use Spark's SQL ordering
   * (`SQLOrderingUtil.compareDoubles`: NaN greatest, -0.0 = 0.0), the
   * ordering `array_max`, `array_sort`, `>` and `=` use. */
@@ -145,13 +151,7 @@ case class IvfProbe(v: Expression, supers: Expression, groups: Expression)
   override def nullable: Boolean = groups.nullable
   override def prettyName: String = "graft_ivf_probe"
 
-  /** (sid, sv, arity) of a super, then (cid, cv, sid, arity) of a group. */
-  @transient private lazy val ords: Seq[Int] = {
-    import NearDupKernels._
-    val (s, g) = (supers.dataType, groups.dataType)
-    Seq(fieldOf(s, "sid")(long), fieldOf(s, "sv")(vec), numFields(s),
-      fieldOf(g, "cid")(long), fieldOf(g, "cv")(vec), fieldOf(g, "sid")(long), numFields(g))
-  }
+  @transient private lazy val ords: Seq[Int] = IvfProbe.ords(supers.dataType, groups.dataType)
 
   override def checkInputDataTypes(): TypeCheckResult =
     NearDupKernels.check(NearDupKernels.vec.isDefinedAt(v.dataType) && !ords.contains(-1),
@@ -185,6 +185,15 @@ case class IvfProbe(v: Expression, supers: Expression, groups: Expression)
 }
 
 object IvfProbe {
+
+  /** (sid, sv, arity) of a super, then (cid, cv, sid, arity) of a group;
+    * -1 for a field that is absent or not of an accepted type. */
+  def ords(supers: DataType, groups: DataType): Seq[Int] = {
+    import NearDupKernels._
+    Seq(fieldOf(supers, "sid")(long), fieldOf(supers, "sv")(vec), numFields(supers),
+      fieldOf(groups, "cid")(long), fieldOf(groups, "cv")(vec), fieldOf(groups, "sid")(long),
+      numFields(groups))
+  }
 
   /** The best two (d, id) keys offered, ascending, nulls first. */
   private final class Top2 {
@@ -312,13 +321,7 @@ case class Sq8Best(aq: Expression, aqn: Expression, self: Expression, lists: Seq
   override def nullable: Boolean = false
   override def prettyName: String = "graft_sq8_best"
 
-  /** (vec_id, q, qn, arity) of a list entry. */
-  @transient private lazy val ords: Seq[Int] = {
-    import NearDupKernels._
-    val t = lists.headOption.map(_.dataType).orNull
-    Seq(fieldOf(t, "vec_id")(long), fieldOf(t, "q") { case ArrayType(ByteType, _) => },
-      fieldOf(t, "qn") { case DoubleType => }, numFields(t))
-  }
+  @transient private lazy val ords: Seq[Int] = Sq8Best.ords(lists.headOption.map(_.dataType).orNull)
 
   override def checkInputDataTypes(): TypeCheckResult =
     NearDupKernels.check(NearDupKernels.vec.isDefinedAt(aq.dataType) &&
@@ -359,6 +362,14 @@ object Sq8Best {
   val schema: StructType = StructType(Seq(
     StructField("cos", DoubleType, nullable = false),
     StructField("vid", LongType, nullable = false)))
+
+  /** (vec_id, q, qn, arity) of a list entry; -1 for a field that is
+    * absent or not of an accepted type. */
+  def ords(list: DataType): Seq[Int] = {
+    import NearDupKernels._
+    Seq(fieldOf(list, "vec_id")(long), fieldOf(list, "q") { case ArrayType(ByteType, _) => },
+      fieldOf(list, "qn") { case DoubleType => }, numFields(list))
+  }
 
   def best(aq: ArrayData, aqnNull: Boolean, aqn: Double, selfNull: Boolean, self: Long,
       lists: Array[ArrayData], oVid: Int, oQ: Int, oQn: Int, nF: Int): InternalRow = {
@@ -401,4 +412,121 @@ object Sq8Best {
     }
     new GenericInternalRow(Array[Any](cos, vid))
   }
+}
+
+/** The stored IVF-SQ8 index as Catalyst data, read by [[IvfSqBest]]:
+  * the routing row's `supers` and `groups` arrays, the entries of each
+  * inverted list keyed on its cid, and the struct field ordinals the
+  * [[IvfProbe]] and [[Sq8Best]] loops read by. [[IvfSqSnapshot.collect]]
+  * builds it once per serve call; the serve plan ships it to the
+  * executors as one broadcast value, so no trigger re-reads or re-joins
+  * the index tables. */
+final class IvfSqSnapshot(val supers: ArrayData, val groups: ArrayData,
+    val lists: LongMap[ArrayData], probeOrds: Array[Int], entryOrds: Array[Int])
+    extends Serializable {
+
+  /** The entries of the `k`-th probed list, or null where the left
+    * equi-join on cid gave null: fewer than k + 1 probed lists, a null
+    * cid, or no list row for the cid. */
+  private def entries(cids: ArrayData, k: Int): ArrayData =
+    if (cids == null || k >= cids.numElements() || cids.isNullAt(k)) null
+    else lists.getOrElse(cids.getLong(k), null)
+
+  /** struct(cos, vid) of the arrival's best entry over its nprobe = 2
+    * lists: [[IvfProbe.probe]] on the raw vector `v`, then
+    * [[Sq8Best.best]] on the codes `aq` over the two probed lists. */
+  def best(v: ArrayData, aq: ArrayData, aqnNull: Boolean, aqn: Double,
+      selfNull: Boolean, self: Long): InternalRow = {
+    val p = probeOrds
+    val cids = IvfProbe.probe(v, supers, groups, p(0), p(1), p(2), p(3), p(4), p(5), p(6))
+    val e = entryOrds
+    Sq8Best.best(aq, aqnNull, aqn, selfNull, self, Array(entries(cids, 0), entries(cids, 1)),
+      e(0), e(1), e(2), e(3))
+  }
+}
+
+object IvfSqSnapshot {
+  /** Collects the one-row `routing` frame (supers, groups) and the
+    * `lists` frame (cid, entries) — the frames of
+    * [[graft.scale.Similarity.ivfSqStreamIndex]] — as Catalyst rows. A
+    * null cid never matches a probe and is dropped. */
+  def collect(routing: DataFrame, lists: DataFrame): IvfSqSnapshot = {
+    val r = routing.select("supers", "groups")
+    val l = lists.select("cid", "entries")
+    val probeOrds = IvfProbe.ords(r.schema("supers").dataType, r.schema("groups").dataType)
+    val entryOrds = Sq8Best.ords(l.schema("entries").dataType)
+    require(!(probeOrds ++ entryOrds).contains(-1) && l.schema("cid").dataType == LongType,
+      s"not an IVF-SQ8 index: routing ${r.schema.simpleString}, lists ${l.schema.simpleString}")
+    val rows = r.queryExecution.executedPlan.executeCollect()
+    require(rows.length == 1, s"the routing frame must hold one row, got ${rows.length}")
+    val byCid = LongMap.from(l.queryExecution.executedPlan.executeCollect().iterator
+      .filterNot(_.isNullAt(0)).map(e => e.getLong(0) -> e.getArray(1)))
+    new IvfSqSnapshot(rows(0).getArray(0), rows(0).getArray(1), byCid,
+      probeOrds.toArray, entryOrds.toArray)
+  }
+}
+
+/** The whole per-arrival serve step of the stored IVF-SQ8 index:
+  * struct(cos, vid) of the best quantized-cosine entry over the
+  * arrival's nprobe = 2 lists, self excluded — what [[IvfProbe]], two
+  * left equi-joins of the list table on the probed cids, and [[Sq8Best]]
+  * computed, bit-identical by construction because it runs the same two
+  * loops ([[IvfSqSnapshot.best]]). `v` is the raw arrival vector the
+  * routing reads, `aq`/`aqn` its SQ8 codes and their norm, `self` its
+  * vec_id.
+  *
+  * The expression holds the [[Broadcast]] handle, not the index: the
+  * task binary stays small, and the generated code is the same for
+  * every plan that reads a snapshot. Generated code resolves the value
+  * once per generated class (a mutable state set at init); interpreted
+  * eval once per expression instance. Null contract: that of
+  * [[Sq8Best]]; the result is never null. */
+case class IvfSqBest(v: Expression, aq: Expression, aqn: Expression, self: Expression,
+    snapshot: Broadcast[IvfSqSnapshot]) extends QuaternaryExpression {
+
+  override def first: Expression = v
+  override def second: Expression = aq
+  override def third: Expression = aqn
+  override def fourth: Expression = self
+  override def dataType: DataType = Sq8Best.schema
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_ivfsq_best"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    NearDupKernels.check(NearDupKernels.vec.isDefinedAt(v.dataType) &&
+        NearDupKernels.vec.isDefinedAt(aq.dataType) && aqn.dataType == DoubleType &&
+        self.dataType == LongType,
+      "graft_ivfsq_best expects (array<double>, array<double>, double, bigint), got " +
+        children.map(_.dataType).mkString(", "))
+
+  @transient private lazy val index: IvfSqSnapshot = snapshot.value
+
+  override def eval(input: InternalRow): Any = {
+    val n = aqn.eval(input)
+    val s = self.eval(input)
+    index.best(v.eval(input).asInstanceOf[ArrayData], aq.eval(input).asInstanceOf[ArrayData],
+      n == null, if (n == null) 0.0 else n.asInstanceOf[Double],
+      s == null, if (s == null) 0L else s.asInstanceOf[Long])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[IvfSqSnapshot].getName
+    val ref = ctx.addReferenceObj("ivfsqSnapshot", snapshot, classOf[Broadcast[_]].getName)
+    val snap = ctx.addMutableState(cls, "ivfsqSnapshot",
+      s => s"$s = ($cls) $ref.value();", forceInline = true)
+    val Seq(a, q, n, s) = children.map(_.genCode(ctx))
+    ev.copy(code = code"""
+      |${a.code}
+      |${q.code}
+      |${n.code}
+      |${s.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = $snap.best(
+      |  ${a.isNull} ? null : ${a.value}, ${q.isNull} ? null : ${q.value},
+      |  ${n.isNull}, ${n.value}, ${s.isNull}, ${s.value});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(a: Expression, q: Expression, n: Expression,
+      s: Expression): IvfSqBest =
+    copy(v = a, aq = q, aqn = n, self = s)
 }

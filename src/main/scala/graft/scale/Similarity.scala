@@ -2282,19 +2282,16 @@ object Similarity {
 
   /** The stored composed index re-laid for the STREAMING serve path
     * ([[graft.streaming.IndexNearDup]]): (routing, lists) where
-    * `routing` is a ONE-ROW local frame packing the fit-sized routing
-    * tables (supers + groups as array<struct> columns, collected here
-    * once — a stream-static cross join rides it along every arriving row
-    * so the per-row argmins run map-side, no streaming aggregation and
-    * no per-trigger re-aggregation of the stored tables), and `lists`
-    * is the stored int8 corpus re-laid one-row-per-inverted-list
-    * (cid, entries array<struct<vec_id, q TINYINT[], qn>>) — the
-    * contiguous-list layout FAISS itself serves from, materialized
-    * once behind the completion-marker protocol every other index
-    * table uses. List size is bounded by the k-schedule (~256 vectors
-    * per list), so a list row is O(tens of KB) at any corpus size and
-    * the stream-static equi-join on cid is the whole per-arrival
-    * candidate fetch. */
+    * `routing` is a ONE-ROW frame packing the fit-sized routing tables
+    * (supers + groups as array<struct> columns) and `lists` is the
+    * stored int8 corpus re-laid one-row-per-inverted-list (cid, entries
+    * array<struct<vec_id, q TINYINT[], qn>>) — the contiguous-list
+    * layout FAISS itself serves from, materialized once behind the
+    * completion-marker protocol every other index table uses, so both
+    * frames follow a rewritten corpus. List size is bounded by the
+    * k-schedule (~256 vectors per list), so a list row is O(tens of KB)
+    * at any corpus size. The stream collects both frames once per call
+    * into its broadcast snapshot ([[graft.functions.IvfSqSnapshot]]). */
   private[graft] def ivfSqStreamIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (supers, groups, assigned) = StoredIndex.readIvf2(spark, ivf2Stored(spark, dir))
     val qtable = sq8Stored(spark, dir)
@@ -2305,11 +2302,8 @@ object Similarity {
         .groupBy(col("cid"))
         .agg(collect_list(struct(col("vec_id"), col("q"), col("qn"))).as("entries"))
         .write.mode("overwrite").parquet(tmp))
-    // collected once: a frame over the stored tables would re-run both
-    // aggregations (and their shuffles) on every trigger
-    val packed = supers.agg(collect_list(struct(col("sid"), col("sv"))).as("supers"))
+    val routing = supers.agg(collect_list(struct(col("sid"), col("sv"))).as("supers"))
       .crossJoin(groups.agg(collect_list(struct(col("cid"), col("cv"), col("sid"))).as("groups")))
-    val routing = spark.createDataFrame(java.util.Arrays.asList(packed.collect(): _*), packed.schema)
     val lists = spark.read.schema(
         "cid BIGINT, entries ARRAY<STRUCT<vec_id: BIGINT, q: ARRAY<TINYINT>, qn: DOUBLE>>")
       .parquet(tmp)

@@ -32,16 +32,15 @@ object Sketches {
     // to the same max), so both aggregates compute identically over
     // the distinct pairs: distinct first (16-byte rows through the
     // exchange), sketches built only ABOVE it — one sketch buffer per
-    // event_type, not per pair. Nulls are filtered up front exactly as
-    // both distinct aggregates ignore them, so n_exact / n_approx are
-    // value-identical.
+    // event_type, not per pair. Both aggregates skip the null value
+    // (as countDistinct did), so n_exact / n_approx are value-identical,
+    // and a type whose values are all null keeps its row with 0.
     val d = Tables.events(spark, dir)
       .select(col("event_type"), col("value"))
-      .filter(col("value").isNotNull)
       .distinct()
     d.groupBy(col("event_type"))
       .agg(
-        count(lit(1)).as("n_exact"),
+        count(col("value")).as("n_exact"),
         approx_count_distinct(col("value"), 0.02).as("n_approx"))
       .select(col("event_type"), col("n_exact"),
         (abs(col("n_approx") - col("n_exact")) <=

@@ -44,7 +44,14 @@ object Spread {
     * shuffle of 50k rows). For those shapes the width follows the SUM
     * of the leaf estimates — the real bytes entering the pipeline —
     * which still grows with corpus size at 100 TB but cannot be
-    * inflated by join-cardinality guesses. */
+    * inflated by join-cardinality guesses.
+    *
+    * The 4096 default cap holds for EVERY caller on purpose, not only
+    * the join/generate shapes: no caller passes another value, and a
+    * bytes-derived width past 4096 × ~128 MB (~512 GB estimated) is
+    * the size where a bad estimate, not real data, is the likelier
+    * cause. An input that really is larger gets 4096 partitions of
+    * more than the target size rather than an unbounded task count. */
   def width(df: DataFrame, maxParts: Int = 4096): Int = {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Generate}
     val para = df.sparkSession.sparkContext.defaultParallelism

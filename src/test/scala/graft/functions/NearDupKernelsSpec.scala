@@ -10,12 +10,15 @@ case class NdSuper(sid: Option[Long], sv: Option[Seq[Option[Double]]])
 case class NdGroup(cid: Option[Long], cv: Option[Seq[Option[Double]]], sid: Option[Long])
 case class NdRoute(tag: String, v: Option[Seq[Option[Double]]],
     supers: Option[Seq[Option[NdSuper]]], groups: Option[Seq[Option[NdGroup]]])
+case class NdServe(tag: String, vec_id: Option[Long], v: Option[Seq[Option[Double]]])
 case class NdArrival(tag: String, aq: Option[Seq[Option[Double]]], aqn: Option[Double],
     vec_id: Option[Long], e1: Option[Seq[Option[NdEntry]]], e2: Option[Seq[Option[NdEntry]]])
 
 /** The near-dup serve kernels ([[Sq8Quantize]], [[IvfProbe]],
   * [[Sq8Best]]) against the higher-order-function forms they replaced
-  * — kept here verbatim as the reference — on fixture embeddings and
+  * — kept here verbatim as the reference — and [[IvfSqBest]] against
+  * the join form it replaced (probe, two left list joins on the probed
+  * cids, best fold), on fixture embeddings and
   * the stored index, plus adversarial rows: distance ties only the id
   * breaks, a single-list index, null and empty candidate arrays,
   * zero-norm candidates and arrivals, an arrival whose best match is
@@ -23,6 +26,12 @@ case class NdArrival(tag: String, aq: Option[Seq[Option[Double]]], aqn: Option[D
   * Every comparison runs twice: generated code only (no fallback), and
   * interpreted only. Doubles compare by raw bits. */
 class NearDupKernelsSpec extends SparkSpec {
+
+  private def ivfProbe(v: Column, supers: Column, groups: Column): Column =
+    call_function("graft_ivf_probe", v, supers, groups)
+
+  private def sq8Best(aq: Column, aqn: Column, self: Column, lists: Column*): Column =
+    call_function("graft_sq8_best", aq +: aqn +: self +: lists: _*)
 
   private def hofSq8(v: Column): Column = {
     val ma = array_max(transform(v, x => abs(x)))
@@ -129,7 +138,7 @@ class NearDupKernelsSpec extends SparkSpec {
   test("graft_ivf_probe routes fixture vectors like the HOF folds") {
     val (routing, _) = graft.scale.Similarity.ivfSqStreamIndex(spark, sfDir)
     val df = fixtureVectors.crossJoin(routing)
-    val out = sameAsHof(df, GraftFunctions.ivfProbe(col("v"), col("supers"), col("groups")),
+    val out = sameAsHof(df, ivfProbe(col("v"), col("supers"), col("groups")),
       hofProbe(col("v"), col("supers"), col("groups")), "vec_id")
     assert(out.size > 100 && out.values.forall(_.asInstanceOf[scala.collection.Seq[_]].size == 2))
   }
@@ -156,7 +165,7 @@ class NearDupKernelsSpec extends SparkSpec {
         Some(Seq(None, Some(NdGroup(Some(1), vec(1, 0), None)), g(9, 5, 0, 0),
           Some(NdGroup(None, vec(1, 0), Some(5))), g(4, 3, 1, 0))))
     ).toDF().repartition(1)
-    val out = sameAsHof(rows, GraftFunctions.ivfProbe(col("v"), col("supers"), col("groups")),
+    val out = sameAsHof(rows, ivfProbe(col("v"), col("supers"), col("groups")),
       hofProbe(col("v"), col("supers"), col("groups")), "tag")
     assert(out("ties") == Seq(4L, 6L), "equal distances rank by id")
     assert(out("one-list") == Seq(0L), "a single-list index probes one list (cid2 null)")
@@ -180,7 +189,7 @@ class NearDupKernelsSpec extends SparkSpec {
         col("c1") === (col("cid") + 1) % nLists, "left")
       .join(lists.select(col("cid").as("c2"), col("entries").as("e2")), col("c2") === col("cid"))
     val out = sameAsHof(arrivals,
-      GraftFunctions.sq8Best(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")),
+      sq8Best(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")),
       hofBest(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")), "vec_id")
     assert(out.size > 100)
     assert(out.values.forall(r => r.asInstanceOf[Row].getLong(1) >= 0), "every arrival has a candidate")
@@ -214,7 +223,7 @@ class NearDupKernelsSpec extends SparkSpec {
       NdArrival("short-q", aq, Some(5.0), Some(0L), Some(Seq(e(2, 5, 3), e(3, 5, 3, 4, 7))), None)
     ).toDF().repartition(1)
     val out = sameAsHof(rows,
-      GraftFunctions.sq8Best(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")),
+      sq8Best(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")),
       hofBest(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")), "tag")
     def best(tag: String) = { val r = out(tag).asInstanceOf[Row]; (r.getDouble(0), r.getLong(1)) }
     assert(best("self") == (24.0 / 25, 2L), "the arrival never matches itself")
@@ -225,5 +234,82 @@ class NearDupKernelsSpec extends SparkSpec {
     assert(best("negative") == (-1.0, 2L))
     assert(best("null-fields") == (16.0 / 25, 9L), "a null code counts 0, null ids/q/qn never win")
     assert(best("short-q") == (1.0, 3L), "the dot runs over the shorter prefix")
+  }
+
+  /** [[IvfSqBest]] over a snapshot of (`routing`, `lists`) against the
+    * join form it replaced, with the HOF folds: route through the
+    * routing row, left-join the list table on each probed cid, fold the
+    * best candidate. */
+  private def sameAsJoinForm(arrivals: DataFrame, routing: DataFrame,
+      lists: DataFrame): Map[String, Any] = {
+    val snapshot = spark.sparkContext.broadcast(IvfSqSnapshot.collect(routing, lists))
+    val df = arrivals
+      .withColumn("aq", hofSq8(col("v")))
+      .withColumn("aqn", sqrt(GraftFunctions.dot(col("aq"), col("aq"))))
+      .crossJoin(routing.select(col("supers"), col("groups")))
+      .withColumn("cids", hofProbe(col("v"), col("supers"), col("groups")))
+      .join(lists.select(col("cid").as("cid1"), col("entries").as("e1")),
+        get(col("cids"), lit(0)) === col("cid1"), "left")
+      .join(lists.select(col("cid").as("cid2"), col("entries").as("e2")),
+        get(col("cids"), lit(1)) === col("cid2"), "left")
+    sameAsHof(df,
+      GraftFunctions.ivfSqBest(col("v"), col("aq"), col("aqn"), col("vec_id"), snapshot),
+      hofBest(col("aq"), col("aqn"), col("vec_id"), col("e1"), col("e2")), "tag")
+  }
+
+  test("graft_ivfsq_best serves the stored index like the probe, list joins and best fold") {
+    import spark.implicits._
+    val (routing, lists) = graft.scale.Similarity.ivfSqStreamIndex(spark, sfDir)
+    val first = fixtureVectors.orderBy("vec_id").first()
+    val v0 = first.getSeq[Double](1).map(Some(_))
+    val odd = Seq(
+      NdServe("null-v", Some(-1L), None),
+      NdServe("empty-v", Some(-2L), Some(Seq())),
+      NdServe("null-elem-v", Some(-3L), Some(None +: v0.tail)),
+      NdServe("zero-v", Some(-4L), Some(v0.map(_ => Some(0.0)))),
+      NdServe("null-self", None, Some(v0)),
+      NdServe("negated", Some(-5L), Some(v0.map(_.map(x => -x))))
+    ).toDF()
+    val arrivals = fixtureVectors
+      .select(col("vec_id").cast("string").as("tag"), col("vec_id"), col("v"))
+      .unionByName(odd).repartition(2)
+    val out = sameAsJoinForm(arrivals, routing, lists)
+    assert(out.size > 100)
+    def best(tag: String) = { val r = out(tag).asInstanceOf[Row]; (r.getDouble(0), r.getLong(1)) }
+    assert(best(first.getLong(0).toString)._2 != first.getLong(0), "an arrival never matches itself")
+    Seq("null-v", "zero-v", "null-self").foreach(t => assert(best(t) == (-2.0, -1L), t))
+    assert(best("negated")._2 >= 0)
+  }
+
+  test("graft_ivfsq_best adversarial indexes: an unlisted probed cid, a null cid, one list") {
+    import spark.implicits._
+    def s(sid: Long, xs: Double*) = Some(NdSuper(Some(sid), vec(xs: _*)))
+    def g(cid: Long, sid: Long, xs: Double*) = Some(NdGroup(Some(cid), vec(xs: _*), Some(sid)))
+    def e(id: Long, qn: Double, q: Byte*) = Some(NdEntry(Some(id), Some(q.map(Some(_))), Some(qn)))
+    val arrivals = Seq(
+      NdServe("x", Some(1L), vec(1, 0)),
+      NdServe("y", Some(5L), vec(0.1, 0.9)),
+      NdServe("mid", Some(6L), vec(0.5, 0.5)),
+      NdServe("null-v", Some(7L), None)
+    ).toDF().repartition(1)
+    // list 11 is routed to but has no row; the null-cid row matches nothing
+    val gapRouting = Seq((Some(Seq(s(0, 1, 0), s(1, 0, 1))),
+      Some(Seq(g(10, 0, 1, 0), g(11, 0, 0.9, 0.1), g(12, 1, 0, 1))))).toDF("supers", "groups")
+    val gapLists = Seq[(Option[Long], Option[Seq[Option[NdEntry]]])](
+      (Some(10L), Some(Seq(e(1, 5, 3, 4), e(2, 5, 4, 3)))),
+      (Some(12L), Some(Seq(e(3, 5, 0, 5), None))),
+      (None, Some(Seq(e(4, 5, 4, 3))))).toDF("cid", "entries")
+    def best(out: Map[String, Any], tag: String) = {
+      val r = out(tag).asInstanceOf[Row]; (r.getDouble(0), r.getLong(1))
+    }
+    val gap = sameAsJoinForm(arrivals, gapRouting, gapLists)
+    assert(best(gap, "x") == (0.8, 2L), "self skipped in list 10, the unlisted list 11 is empty")
+    assert(best(gap, "y")._2 == 3L)
+    val oneRouting = Seq((Some(Seq(s(0, 1, 1))), Some(Seq(g(0, 0, 1, 1))))).toDF("supers", "groups")
+    val oneLists = Seq[(Option[Long], Option[Seq[Option[NdEntry]]])](
+      (Some(0L), Some(Seq(e(9, 5, 4, 3))))).toDF("cid", "entries")
+    val one = sameAsJoinForm(arrivals, oneRouting, oneLists)
+    Seq("x", "y", "mid").foreach(t => assert(best(one, t)._2 == 9L, s"$t: a single-list index probes one list"))
+    assert(best(one, "null-v") == (-2.0, -1L))
   }
 }

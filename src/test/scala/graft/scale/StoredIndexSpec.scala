@@ -1,17 +1,36 @@
 package graft.scale
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import graft.streaming.IndexNearDup
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** The stored ANN indexes are keyed on the corpus they were built
   * from: rewriting `embeddings.parquet` under the same dir, in the same
   * JVM, must make every stored-index reader rebuild instead of serving
-  * the index of the old corpus. */
+  * the index of the old corpus, and a new near-dup stream call serve a
+  * snapshot of the new one. */
 class StoredIndexSpec extends SparkSpec {
 
   private def same(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private def elementType(t: DataType): StructType = t match {
+    case ArrayType(st: StructType, _) => st
+    case other => fail(s"expected array<struct>, got $other")
+  }
+
+  private def rowsOf(a: ArrayData, t: DataType): Seq[Row] =
+    CatalystTypeConverters.convertToScala(a, t).asInstanceOf[scala.collection.Seq[Row]].toSeq
+
+  /** The elements of a Catalyst array<struct> as a frame. */
+  private def frameOf(a: ArrayData, t: DataType): DataFrame =
+    spark.createDataFrame(rowsOf(a, t).asJava, elementType(t))
 
   test("a rewritten corpus rebuilds every stored index before it is served") {
     val dir = java.nio.file.Files.createTempDirectory("graft_storedidx").toString
@@ -25,6 +44,7 @@ class StoredIndexSpec extends SparkSpec {
       Similarity.annIvf2Delete(spark, dir).collect()
       Similarity.annIvfSqServe(spark, dir).collect()
       Similarity.ivfSqStreamIndex(spark, dir)._2.collect()
+      IndexNearDup.snapshot(spark, dir)
 
       // same dir, new corpus: each id takes the vector of id + 7, and
       // the last 20 ids are gone (so the memoized row count is stale too)
@@ -63,6 +83,18 @@ class StoredIndexSpec extends SparkSpec {
         .select(col("g.cid").as("cid"), col("g.cv").as("cv"), col("g.sid").as("sid"))
       check(same(storedSupers, idx.supers) && same(storedGroups, idx.groups),
         "ivfSqStreamIndex served the routing tables of the old corpus")
+
+      // a new stream call serves a snapshot of the new corpus's index
+      val snap = IndexNearDup.snapshot(spark, dir)
+      val entryType = lists.schema("entries").dataType
+      val snapLists = spark.createDataFrame(
+          snap.lists.toSeq.flatMap { case (cid, es) => rowsOf(es, entryType).map(e => Row(cid +: e.toSeq: _*)) }.asJava,
+          StructType(StructField("cid", LongType) +: elementType(entryType).fields))
+        .select(col("cid"), col("vec_id"), transform(col("q"), _.cast("double")).as("q"), col("qn"))
+      check(same(snapLists, inlineLists), "nearDupStream served the inverted lists of the old corpus")
+      check(same(frameOf(snap.supers, routing.schema("supers").dataType), idx.supers) &&
+        same(frameOf(snap.groups, routing.schema("groups").dataType), idx.groups),
+        "nearDupStream served the routing tables of the old corpus")
       assert(stale.result().isEmpty, stale.result().mkString("\n"))
     } finally {
       spark.catalog.clearCache()

@@ -12,8 +12,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * equivalence against an INDEPENDENT mirror (joins + windows on the
   * higher-order-function arithmetic, where the channel runs codegen'd
   * kernels) across micro-batch boundaries, the statelessness that is
-  * the channel's scale claim, and the per-trigger plan: kernels only,
-  * no shuffle. */
+  * the channel's scale claim, and the per-trigger plan: one map-only
+  * job running the kernels, with no join, broadcast or shuffle. */
 class IndexNearDupSpec extends SparkSpec {
 
   private def ts(s: Long) = new java.sql.Timestamp(1700000000000L + s * 1000)
@@ -155,17 +155,21 @@ class IndexNearDupSpec extends SparkSpec {
       mem.addData(b: _*); q.processAllAvailable()
       val (after, sa) = listener.quiesce()
       assert(sb && sa, "listener must settle around the micro-batch")
-      assert(after.jobs > before.jobs, "the micro-batch must have run jobs")
+      assert(after.jobs - before.jobs == 1,
+        s"a micro-batch must run one job, ran ${after.jobs - before.jobs}")
       assert(after.shuffleWrite == before.shuffleWrite,
         s"a micro-batch must shuffle nothing, wrote ${after.shuffleWrite - before.shuffleWrite} bytes")
       val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
-      // AQE runs streaming plans too: descend into its query stages
-      val exprs = new AdaptiveSparkPlanHelper {}.collect(plan) { case p => p.expressions }.flatten
-        .flatMap(_.collect { case e => e.getClass.getSimpleName })
+      // descend into AQE query stages, should any appear
+      val nodes = new AdaptiveSparkPlanHelper {}.collect(plan) { case p => p }
+      val staticSide = nodes.map(_.getClass.getSimpleName).filter(n => n.contains("Join") ||
+        Set("BroadcastExchangeExec", "BroadcastQueryStageExec", "AdaptiveSparkPlanExec")(n))
+      assert(staticSide.isEmpty, s"the serve plan must hold no join, broadcast or AQE node: $staticSide")
+      val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e.getClass.getSimpleName })
       val hofs = Set("ArraySort", "ArrayAggregate", "ArrayTransform", "ArrayFilter",
         "ArrayExists", "ZipWith")
       assert(exprs.filter(hofs).isEmpty, s"interpreted HOFs in the serve plan: ${exprs.filter(hofs)}")
-      Seq("Sq8Quantize", "IvfProbe", "Sq8Best").foreach(k =>
+      Seq("Sq8Quantize", "IvfSqBest").foreach(k =>
         assert(exprs.contains(k), s"$k missing from the serve plan"))
     } finally {
       spark.sparkContext.removeSparkListener(listener)
@@ -176,9 +180,7 @@ class IndexNearDupSpec extends SparkSpec {
   test("the same channel function over batch input gives the same rows") {
     import spark.implicits._
     val rows = arrivalRows()
-    val (routing, lists) = graft.scale.Similarity.ivfSqStreamIndex(spark, sfDir)
-    val batch = IndexNearDup.nearDupAgainst(
-      rows.toDF("vec_id", "v", "ts"), routing, lists, tau)
+    val batch = IndexNearDup.nearDupStream(spark, sfDir, rows.toDF("vec_id", "v", "ts"), tau)
     val expected = mirror(rows.toDF("vec_id", "v", "ts"))
     assert(batch.exceptAll(expected).count() == 0 &&
       expected.exceptAll(batch).count() == 0,
